@@ -2,8 +2,10 @@ package graft.osm
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+import org.apache.spark.sql.types.StructType
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{FileAlreadyExistsException, Files, Paths,
@@ -91,14 +93,38 @@ object VersionedTable {
     * barrier (deterministic, no sleeps). */
   private[osm] var commitRaceHook: () => Unit = () => ()
 
+  /** A commit's table write failed and the commit pool did not drain
+    * within its timeout: a cancelled sibling write may still land bytes
+    * under `v=version`, so the claim on that version is KEPT — a writer
+    * that re-claimed it could publish a directory polluted by them. */
+  final class UndrainedCommitException private[osm] (
+      root: String, version: Long, group: String, cause: Throwable)
+    extends IllegalStateException(
+      s"commit of version $version at $root failed, and its table " +
+        s"writes (job group $group) did not stop within the drain " +
+        "timeout. The claim is kept so no writer can reuse a " +
+        "directory they may still write to. Once they have stopped, " +
+        s"delete $root/manifest.v=$version.json to recover.", cause)
+
+  /** Test seam: waits for the commit pool to drain after a failed table
+    * write and returns false on a timeout — lets a spec force the
+    * timeout path without a write that outlives it. */
+  private[osm] var awaitPoolDrain:
+    java.util.concurrent.ExecutorService => Boolean =
+    _.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
+
   /** Bucketed-table layout: `nBuckets` hash buckets on column `key`;
     * `versions(b)` = the version whose directory holds bucket b.
     * `schema` is the table's DDL, recorded at commit time so a table
     * that has NEVER held a row (zero parquet footers anywhere) still
     * reads back with resolvable columns — without it, a store holding
     * e.g. zero relations breaks every downstream join at analysis
-    * time (CdcPropertySpec). Optional for manifests written before
-    * round 9. */
+    * time (CdcPropertySpec). Readers trust it: [[readBuckets]] reads
+    * with it as the schema instead of inferring one from a Parquet
+    * footer, so a writer must keep every bucket file's columns equal to
+    * it (SnapshotOpenSpec). Manifests written before round 9 carry
+    * none and fall back to footer inference. Bucket paths resolve
+    * through the session's Hadoop conf. */
   final case class BucketSpec(nBuckets: Int, key: String,
                               versions: Vector[Long],
                               schema: Option[String] = None)
@@ -220,16 +246,19 @@ object VersionedTable {
     }
   }
 
-  private def pathExists(p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(new org.apache.hadoop.conf.Configuration())
-      .exists(hp)
-  }
-
   /** Read ONLY the given buckets of a bucketed table — the partition-
     * pruned scan delta commits use to touch O(changed) data. A bucket
     * no row ever hashed into has no directory (partitionBy only writes
-    * populated values); such buckets read as zero rows. */
+    * populated values); such buckets read as zero rows.
+    *
+    * Opening the read starts no Spark job, like the reference's read
+    * transaction (`src/cmd.cpp:50`): the read schema is the DDL the
+    * manifest recorded, so Parquet never infers it from a footer, and
+    * the bucket directories that exist come from one listing per
+    * distinct `v=N/<table>` directory, through one FileSystem resolved
+    * from the session's Hadoop conf (so `spark.hadoop.*` settings
+    * apply). Manifests without a recorded schema fall back to footer
+    * inference. */
   def readBuckets(spark: SparkSession, root: String, table: String,
                   buckets: Seq[Int], pinned: Option[Manifest] = None)
   : DataFrame = {
@@ -237,27 +266,28 @@ object VersionedTable {
       throw new IllegalStateException(s"no committed version at $root"))
     val spec = m.buckets.getOrElse(table, throw new IllegalStateException(
       s"$table is not bucketed"))
-    def bucketPath(b: Int) = s"$root/v=${spec.versions(b)}/$table/__bucket=$b"
-    val existing = buckets.map(bucketPath).filter(pathExists)
-    if (existing.nonEmpty) spark.read.parquet(existing: _*)
-    else {
-      // zero rows in every requested bucket: produce an EMPTY frame
-      // with the table's real schema (from any bucket dir ever written,
-      // current or historical) so downstream joins/unions still resolve
-      val glob = new org.apache.hadoop.fs.Path(
-        s"$root/v=*/$table/__bucket=*")
-      val hits = glob.getFileSystem(
-        new org.apache.hadoop.conf.Configuration()).globStatus(glob)
-      if (hits != null && hits.nonEmpty)
-        spark.read.parquet(hits.head.getPath.toString).limit(0)
-      else spec.schema match {
-        // table has never had a row: empty frame with the DDL the
-        // manifest recorded at commit time, so joins still resolve
-        case Some(ddl) => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(ddl))
-        case None => spark.emptyDataFrame // pre-round-9 manifest
-      }
+    val fs =
+      new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+    def tableDir(b: Int) = s"$root/v=${spec.versions(b)}/$table"
+    val listed = scala.collection.mutable.Map[String, Set[String]]()
+    def exists(b: Int): Boolean = listed.getOrElseUpdate(tableDir(b),
+      try fs.listStatus(new Path(tableDir(b))).map(_.getPath.getName).toSet
+      catch { case _: java.io.FileNotFoundException => Set.empty[String] }
+    ).contains(s"__bucket=$b")
+    val existing =
+      buckets.filter(exists).map(b => s"${tableDir(b)}/__bucket=$b")
+    spec.schema.map(StructType.fromDDL) match {
+      // an empty path list reads as zero rows with the recorded schema,
+      // so downstream joins/unions still resolve
+      case Some(schema) => spark.read.schema(schema).parquet(existing: _*)
+      case None if existing.nonEmpty => spark.read.parquet(existing: _*)
+      case None =>
+        // schema-less manifest and zero rows in every requested bucket:
+        // borrow the real schema from any bucket dir ever written
+        val hits = fs.globStatus(new Path(s"$root/v=*/$table/__bucket=*"))
+        if (hits != null && hits.nonEmpty)
+          spark.read.parquet(hits.head.getPath.toString).limit(0)
+        else spark.emptyDataFrame
     }
   }
 
@@ -278,6 +308,23 @@ object VersionedTable {
   /** Undo a claim after a data-write failure (never after publish). */
   private def releaseClaim(root: String, version: Long): Unit =
     Files.deleteIfExists(versionManifestPath(root, version))
+
+  /** Run a commit's writes and publish under its claim on `version`.
+    * The claim is released on ANY pre-publish failure, including a
+    * failed manifest write (the current pointer only advances in
+    * writeManifest's final atomic move, so releasing is safe; an orphan
+    * claim would block every future commit) — except when the commit
+    * pool did not drain, since its writes may still land under
+    * `v=version`. A dry-run releases its claim when done, leaving its
+    * data as the usual unclaimed vacuum-collectable leftover. */
+  private def underClaim(root: String, version: Long, dryRun: Boolean)
+                        (body: => Unit): Unit = {
+    try body catch {
+      case e: UndrainedCommitException => throw e
+      case e: Throwable => releaseClaim(root, version); throw e
+    }
+    if (dryRun) releaseClaim(root, version)
+  }
 
   private def writeManifest(root: String, m: Manifest): Unit = {
     val node: ObjectNode = mapper.createObjectNode()
@@ -322,14 +369,6 @@ object VersionedTable {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Write all `tables` as the next version and atomically publish it
-    * together with `meta` (merged over the previous version's meta).
-    * Tables present in the previous manifest but NOT in `tables` are
-    * carried forward by link (their manifest entry keeps pointing at
-    * the old version's files — nothing is rewritten).
-    * With `dryRun = true` the data is computed and written but the
-    * manifest is NOT swapped — the reference's no-`--commit` mode.
-    * Returns the version written (committed or not). */
   /** Run the independent per-table write jobs of one commit from a
     * small driver thread pool (optimization-guide §2.6 "overlap
     * independent jobs"): Spark's scheduler runs several jobs at once,
@@ -350,6 +389,7 @@ object VersionedTable {
       .filter(_ >= 1).getOrElse(4)
 
   private def parallelTableWrites[A](
+      root: String, version: Long,
       sc: => org.apache.spark.SparkContext, tables: Seq[A])
       (write: A => Unit): Unit = {
     val poolSize = math.min(commitPoolSize, tables.size)
@@ -387,15 +427,19 @@ object VersionedTable {
       } catch { case e: Throwable =>
         try context.cancelJobGroup(group)
         catch { case _: Throwable => () }
+        // bounded drain: cancelled writes must actually stop before the
+        // claim release that follows a failure; if they do not, the
+        // claim stays (see underClaim)
+        pool.shutdownNow()
+        if (!awaitPoolDrain(pool)) {
+          System.err.println(s"[versioned-table] ERROR commit pool did " +
+            s"not drain: version $version at $root, job group $group; " +
+            "keeping the claim")
+          throw new UndrainedCommitException(root, version, group, e)
+        }
         throw e
       }
-    } finally {
-      pool.shutdownNow()
-      // bounded drain: cancelled writes must actually stop before the
-      // claim release that follows a failure
-      pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-      ()
-    }
+    } finally { pool.shutdownNow(); () }
   }
 
   /** r16: bucketed commit writes repartition to EXACTLY the layout's
@@ -412,6 +456,14 @@ object VersionedTable {
       df.repartition(col("__bucket"))
     else df.repartition(math.max(1, width), col("__bucket"))
 
+  /** Write all `tables` as the next version and atomically publish it
+    * together with `meta` (merged over the previous version's meta).
+    * Tables present in the previous manifest but NOT in `tables` are
+    * carried forward by link (their manifest entry keeps pointing at
+    * the old version's files — nothing is rewritten).
+    * With `dryRun = true` the data is computed and written but the
+    * manifest is NOT swapped — the reference's no-`--commit` mode.
+    * Returns the version written (committed or not). */
   def commit(root: String, tables: Map[String, DataFrame],
              meta: Map[String, String] = Map.empty,
              dryRun: Boolean = false): Long = {
@@ -421,16 +473,10 @@ object VersionedTable {
     // a DRY-RUN claims too: it writes real data under v=next, and an
     // unclaimed write could stomp a concurrent real commit's claimed
     // directory (silent corruption published under the real commit's
-    // manifest). The dry-run claim is released in the finally below,
-    // leaving its data as the usual unclaimed vacuum-collectable
-    // leftover.
+    // manifest)
     claimVersion(root, next)
-    // the claim is released on ANY pre-publish failure, including a
-    // failed manifest write (the current pointer only advances in
-    // writeManifest's final atomic move, so releasing is always safe
-    // here; an orphan claim would block every future commit)
-    try {
-      parallelTableWrites(
+    underClaim(root, next, dryRun) {
+      parallelTableWrites(root, next,
         tables.head._2.sparkSession.sparkContext, tables.toSeq) {
         case (name, df) =>
           df.write.mode("overwrite").parquet(s"$root/v=$next/$name")
@@ -448,9 +494,7 @@ object VersionedTable {
           prevTv ++ tables.keys.map(_ -> next),
           prevM.buckets -- tables.keys))
       }
-    } catch { case e: Throwable =>
-      releaseClaim(root, next); throw e
-    } finally { if (dryRun) releaseClaim(root, next) }
+    }
     next
   }
 
@@ -489,10 +533,8 @@ object VersionedTable {
     val prev = current(root)
     val next = prev.map(_.version).getOrElse(0L) + 1L
     claimVersion(root, next) // dry-runs claim too — see commit()
-    // claim released on any pre-publish failure incl. the manifest
-    // write itself — see commit()
-    try {
-      parallelTableWrites(
+    underClaim(root, next, dryRun) {
+      parallelTableWrites(root, next,
         tables.head._2._1.sparkSession.sparkContext, tables.toSeq) {
         case (name, (df, key)) =>
         bucketRepartition(
@@ -538,9 +580,7 @@ object VersionedTable {
           prevM.tableVersions -- tables.keys,
           prevM.buckets ++ bk))
       }
-    } catch { case e: Throwable =>
-      releaseClaim(root, next); throw e
-    } finally { if (dryRun) releaseClaim(root, next) }
+    }
     next
   }
 
@@ -696,9 +736,7 @@ object VersionedTable {
     }
     val next = prev.version + 1L
     claimVersion(root, next) // dry-runs claim too — see commit()
-    // claim released on any pre-publish failure incl. the manifest
-    // write itself — see commit()
-    try {
+    underClaim(root, next, dryRun) {
       // resolve (spec, changed buckets) ONCE per table and reuse for
       // both the write pass and the manifest update below — computing
       // them twice was correct only because changedBuckets is an eager
@@ -712,7 +750,7 @@ object VersionedTable {
       // per-table changed-bucket rewrites are independent jobs —
       // overlap them like commit()/commitBucketed() (guide §2.6); the
       // manifest spec update below is pure driver arithmetic
-      parallelTableWrites(spark.sparkContext, resolved) {
+      parallelTableWrites(root, next, spark.sparkContext, resolved) {
         case (name, spec, changed, transform) =>
         if (changed.nonEmpty) {
           val old = readBuckets(spark, root, name, changed, Some(prev))
@@ -750,9 +788,7 @@ object VersionedTable {
         writeManifest(root, prev.copy(version = next,
           meta = prev.meta ++ meta,
           buckets = prev.buckets ++ newBuckets))
-    } catch { case e: Throwable =>
-      releaseClaim(root, next); throw e
-    } finally { if (dryRun) releaseClaim(root, next) }
+    }
     next
   }
 }

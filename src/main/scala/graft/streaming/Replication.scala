@@ -4,7 +4,7 @@ import graft.osm.{Changeset, VersionedTable}
 import graft.osm.VersionedTable.Delta
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{MapType, StructType}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Replication surface: seqnum <-> URL/timestamp utilities (F7/F8,
@@ -189,21 +189,18 @@ object Replication {
     // is arbitrary-but-deterministic, never partition-order-dependent.
     // last-resort content tiebreaker (malformed diffs only — the real
     // ordering is (seqnum, version, timestamp, visible) above, and a
-    // well-formed batch never reaches the hash). r16: hash the columns
-    // directly instead of xxhash64(to_json(struct(*))) — JSON text
-    // construction ran per input row and is pure per-task CPU; the
-    // direct hash is codegen'd. Maps are not hashable in Spark, so
-    // tags hashes via its sorted entry array — still a deterministic
+    // well-formed batch never reaches the hash). The columns are hashed
+    // directly, which codegens and builds no per-row JSON text. Spark
+    // cannot hash maps, so every map column, whatever its name, hashes
+    // as its entry array sorted by key — still a deterministic
     // function of the row's CONTENT, which is all the contract asks
     // (the winner is arbitrary-but-deterministic either way).
-    // SPARK_GRAFT_CHANGE_HASH=json restores the old form (A/B lever).
-    val contentHash =
-      if (sys.env.get("SPARK_GRAFT_CHANGE_HASH").contains("json"))
-        xxhash64(to_json(struct(col("*"))))
-      else xxhash64(batch.columns.map {
-        case "tags" => sort_array(map_entries(col("tags")))
-        case c => col(c)
-      }: _*)
+    val contentHash = xxhash64(batch.schema.fields.toSeq.map { f =>
+      f.dataType match {
+        case _: MapType => sort_array(map_entries(col(f.name)))
+        case _ => col(f.name)
+      }
+    }: _*)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("etype"), col("id"))
       .orderBy(col("seqnum").desc,

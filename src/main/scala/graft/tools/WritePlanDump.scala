@@ -32,7 +32,8 @@ object WritePlanDump {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    Files.createDirectories(out.getParent)
+    // a bare file name has no parent directory to create
+    Option(out.getParent).foreach(Files.createDirectories(_))
     Files.writeString(out, s"==== write-side plans: $name ====\n")
     val n = new AtomicInteger()
     spark.listenerManager.register(new QueryExecutionListener {

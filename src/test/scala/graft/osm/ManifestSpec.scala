@@ -341,6 +341,35 @@ class ManifestSpec extends AnyFunSuite {
     assert(VersionedTable.current(root).get.version == 2L)
   }
 
+  test("an undrained commit pool keeps the claim and names the version") {
+    import org.apache.spark.sql.functions._
+    val root = Files.createTempDirectory("graft-undrained").toString
+    VersionedTable.commit(root, Map("t" -> Seq((1L, "a")).toDF("id", "v")))
+    val bad = spark.range(1)
+      .select(col("id"), assert_true(lit(false)).as("v"))
+    // two tables: the writes run from the commit pool, and one fails
+    val tables = Map("t" -> bad, "u" -> Seq((2L, "b")).toDF("id", "v"))
+    val drain = VersionedTable.awaitPoolDrain
+    VersionedTable.awaitPoolDrain = _ => false // the drain times out
+    val e = try intercept[VersionedTable.UndrainedCommitException] {
+      VersionedTable.commit(root, tables)
+    } finally VersionedTable.awaitPoolDrain = drain
+    assert(e.getCause != null, "the write failure is kept as the cause")
+    assert(e.getMessage.contains("version 2") &&
+      e.getMessage.contains("graft-commit-"))
+    // the claim survives: no writer can reuse v=2 while writes may land
+    val claim = java.nio.file.Paths.get(root, "manifest.v=2.json")
+    assert(Files.exists(claim))
+    assert(VersionedTable.current(root).get.version == 1L)
+    intercept[VersionedTable.ConcurrentCommitException] {
+      VersionedTable.commit(root, Map("t" -> Seq((2L, "b")).toDF("id", "v")))
+    }
+    // recovery is the operator's explicit step the message names
+    Files.delete(claim)
+    assert(VersionedTable.commit(root,
+      Map("t" -> Seq((2L, "b")).toDF("id", "v"))) == 2L)
+  }
+
   test("a failed PUBLISH releases the claim too (no orphan after a " +
     "manifest-write error)") {
     // data writes succeed and the history entry finalizes, then the

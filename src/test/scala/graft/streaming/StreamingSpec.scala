@@ -146,6 +146,32 @@ class StreamingSpec extends AnyFunSuite {
     assert(VersionedTable.current(root).get.version == committed)
   }
 
+  test("the dedup content hash takes every map column, not just tags") {
+    import org.apache.spark.sql.functions._
+    val root = Files.createTempDirectory("graft-repl-maps").toString
+    VersionedTable.commitBucketed(root, Map(
+      "locations" -> (Seq((1L, 10, 10, 1), (2L, 20, 20, 1))
+        .toDF("id", "lon", "lat", "version"), "id")),
+      nBuckets = 4,
+      meta = Map("osmosis_replication_sequence_number" -> "0"))
+    // two changes of node 1 that tie on (seqnum, version, timestamp,
+    // visible), so only the content hash orders them; the batch carries
+    // a second map column beside tags
+    val batch = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(
+        chg(1L, visible = true, 11, 11, 2, 1L),
+        chg(1L, visible = true, 12, 12, 2, 1L))),
+      Replication.changeSchema)
+      .withColumn("extra", map(lit("lon"), col("lon").cast("string")))
+    assert(Replication.applyBatch(spark, root, batch, 1L) ==
+      Replication.ApplyResult.Applied)
+    val loc = VersionedTable.read(spark, root, "locations")
+      .select($"id", $"lon", $"lat").as[(Long, Int, Int)].collect()
+    assert(loc.count(_._1 == 1L) == 1, s"got ${loc.toSeq}")
+    assert(Set((1L, 11, 11), (1L, 12, 12)).exists(loc.contains))
+    assert(loc.contains((2L, 20, 20)))
+  }
+
   test("file ingest -> bucketed store -> streaming catch-up, end to end") {
     import org.apache.spark.sql.functions._
     import graft.osm.Ingest

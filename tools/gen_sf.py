@@ -5,8 +5,9 @@ Generates an sfN directory with the same schema and distribution SHAPE as
 the driver's /root/testdata tables (profiled from sf0.1: categorical
 domains are read straight from the sf0.1 parquet, numeric ranges match,
 documents reuse the same 31-word vocab so the LSH/minhash collision
-structure carries over, events keep TIMESTAMP(NANOS) so Queries.T's
-nanosAsLong path is exercised).
+structure carries over, and events.ts is timestamp[us] like the driver's
+current tables, so slope runs take the same Queries.T branch as the
+graded data).
 
 This data is for BENCH SLOPE MEASUREMENT ONLY (README "BENCH_sf1"):
 correctness stays gated on the driver's own sf0.01 tables — do not point
@@ -131,17 +132,15 @@ def main(k, outdir):
                                pa.timestamp("us")),
     }))
 
-    # ---- events (TIMESTAMP NANOS parquet, like the driver's) ----
+    # ---- events (timestamp[us] parquet, like the driver's) ----
     etype = cats("events", "event_type")
     ev = np.arange(n_ev, dtype=np.int64)
-    t0 = np.datetime64("2024-01-01T00:00:00", "ns")
-    span_ns = 30 * 24 * 3600 * 1_000_000_000
-    # microsecond-precision instants stored as ns (matches the driver)
-    ts = t0 + (rng.integers(0, span_ns // 1000, n_ev)
-               * 1000).astype("timedelta64[ns]")
+    t0 = np.datetime64("2024-01-01T00:00:00", "us")
+    span_us = 30 * 24 * 3600 * 1_000_000
+    ts = t0 + rng.integers(0, span_us, n_ev).astype("timedelta64[us]")
     write(outdir, "events", pa.table({
         "event_id": ev,
-        "ts": pa.array(ts, pa.timestamp("ns")),
+        "ts": pa.array(ts, pa.timestamp("us")),
         "user_id": rng.integers(0, n_cust // 10, n_ev).astype(np.int64),
         "event_type": etype[rng.integers(0, len(etype), n_ev)],
         "value": np.round(np.abs(rng.normal(60, 90, n_ev)), 2),

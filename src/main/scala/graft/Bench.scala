@@ -22,30 +22,7 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // dev A/B knob ONLY (round artifacts always use the harness default
-    // of `cpus`): q03's sf10 slope is sort-merge spill at 32 partitions
-    // x 24g heap — SPARK_GRAFT_SHUFFLE_PARTITIONS lets the spill cost
-    // be MEASURED (README §BENCH_r12) instead of inferred. AQE
-    // coalescing (on by default in Spark 4) folds small post-shuffle
-    // partitions back together, so a higher setting costs little where
-    // it isn't needed.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      // bounded-buffer aggregates (topk_by_score) keep thousands of
-      // keys hash-resident; the 128-key sort-based fallback default
-      // would sort whole scored partitions (session-bootstrap home for
-      // what knnEdges used to set as a hidden side effect — r14
-      // advisor)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1024")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("graft-bench")
 
     import org.apache.spark.sql.functions.{count, lit}
     // Materialize through the noop sink AND count output rows in the
@@ -62,10 +39,6 @@ object Bench {
     def run(name: String,
             fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
     : Long = {
-      if (sys.env.contains("SPARK_GRAFT_BENCH_NO_OBSERVE")) {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        return -1L
-      }
       val obs = org.apache.spark.sql.Observation(
         s"rows_${name}_${System.nanoTime()}")
       fn(spark, sfDir).observe(obs, count(lit(1)).as("n"))
@@ -246,14 +219,11 @@ object Bench {
     // (r12 verdict "What's wrong" #2). The row count doubles as the
     // work-driver telemetry slope analysis needs to annotate
     // candidate-driven consumers (stage_of below maps consumer ->
-    // stage). SPARK_GRAFT_BENCH_NO_STAGES restores the old inclusive
-    // billing for A/Bs against pre-r13 artifacts.
-    val stagesToRun =
-      if (sys.env.contains("SPARK_GRAFT_BENCH_NO_STAGES")) Seq.empty
-      else BenchStages.required(selected ++
-        // a stage row named directly in BENCH_ONLY runs even with no
-        // consumer selected (fresh-JVM isolation of the build itself)
-        only.getOrElse(Set.empty).filter(_.startsWith("stage:")))
+    // stage).
+    val stagesToRun = BenchStages.required(selected ++
+      // a stage row named directly in BENCH_ONLY runs even with no
+      // consumer selected (fresh-JVM isolation of the build itself)
+      only.getOrElse(Set.empty).filter(_.startsWith("stage:")))
     val stageResults = stagesToRun.map { st =>
       sweep()
       StageTripwire.setRow(st.name)

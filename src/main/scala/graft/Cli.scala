@@ -82,24 +82,7 @@ object Cli {
 
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) { System.err.println(usage); sys.exit(2) }
-    val base = SparkSession.builder()
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep bounded top-k aggregates hash-resident (see Bench)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1024")
-      .config("spark.ui.enabled", "false")
-      .appName(s"graft-${args.head}")
-    // an explicit builder master would OVERRIDE spark-submit --master
-    // and silently run a cluster deployment on the driver: only fall
-    // back to local[] (and only then pin shuffle partitions to it)
-    // when no master was submitted
-    val spark = (if (sys.props.contains("spark.master")) base
-      else base
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(s"graft-${args.head}")
     try run(spark, args.toIndexedSeq)
     catch { case e: CliError =>
       System.err.println(e.getMessage)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev-loop plan audit (not driver-invoked): print the formatted
   * physical plan of named queries so shuffle count, pushed filters,
   * codegen spans, and TakeOrdered-vs-Sort choices can be reviewed.
@@ -10,14 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("graft-explain")
     names.foreach { name =>
       println(s"==== $name ====")
       SparkEntry.queries.get(name) match {

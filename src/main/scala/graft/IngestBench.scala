@@ -1,7 +1,7 @@
 package graft
 
 import graft.osm.{Extract, Ingest, SyntheticOsm}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Ingest-throughput headline: PBF bytes/second through the full
@@ -40,15 +40,9 @@ object IngestBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val copies = sys.env.getOrElse("SPARK_GRAFT_INGEST_COPIES", "1").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("graft-ingest-bench")
+    val cores = spark.sparkContext.defaultParallelism
 
     val base = SyntheticOsm.materialized(spark, sfDir)
     // id offset: far above any base id, one stride per copy
@@ -67,7 +61,7 @@ object IngestBench {
       t.locations.select(col("id")), t.ways.select(col("id")),
       t.relations.select(col("id")))
     val pbfDir = graft.TempDirs.create("graft-ingestbench-pbf")
-    Ingest.writeExtract(t, all, pbfDir, shards = cpus.toInt,
+    Ingest.writeExtract(t, all, pbfDir, shards = cores,
       format = "osmpbf",
       headerOpts = Ingest.pbfHeaderOptions(None,
         replicationTs = Some(1600000000L), seqnum = Some(42L)))
@@ -88,8 +82,8 @@ object IngestBench {
       f"""{"metric":"ingest_expand","input_mb":${mb}%.1f,""" +
         f""""elements":$elements,"seconds":${secs}%.1f,""" +
         f""""mb_per_s":${mb / secs}%.2f,""" +
-        f""""mb_per_s_per_core":${mb / secs / cpus.toInt}%.3f,""" +
-        f""""cores":$cpus,"copies":$copies,"sf":"$sfDir"}"""
+        f""""mb_per_s_per_core":${mb / secs / cores}%.3f,""" +
+        f""""cores":$cores,"copies":$copies,"sf":"$sfDir"}"""
     println(json)
     spark.stop()
   }

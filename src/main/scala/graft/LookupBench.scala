@@ -1,7 +1,6 @@
 package graft
 
 import graft.osm.{Extract, Ingest, OsmDb, SyntheticOsm}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Point-lookup latency headline: the reference's core design
@@ -49,15 +48,8 @@ object LookupBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val nLookups = sys.env.getOrElse("SPARK_GRAFT_LOOKUPS", "64").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("graft-lookup-bench")
 
     // ---- setup, untimed: build (or reuse) the bucketed store ----
     val root = sys.env.get("SPARK_GRAFT_LOOKUP_DB").getOrElse {
@@ -66,7 +58,7 @@ object LookupBench {
         t.locations.select(col("id")), t.ways.select(col("id")),
         t.relations.select(col("id")))
       val pbfDir = TempDirs.create("graft-lookupbench-pbf")
-      Ingest.writeExtract(t, all, pbfDir, shards = cpus.toInt,
+      Ingest.writeExtract(t, all, pbfDir, shards = spark.sparkContext.defaultParallelism,
         format = "osmpbf")
       val r = sys.env.get("SPARK_GRAFT_LOOKUP_BUILD_DB")
         .getOrElse(TempDirs.create("graft-lookupbench-db"))

@@ -1,7 +1,7 @@
 package graft
 
 import graft.osm.{Extract, Ingest, SyntheticOsm}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Replication apply-throughput headline: OsmChange elements/second
@@ -29,16 +29,10 @@ object UpdateBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val mods = sys.env.getOrElse("SPARK_GRAFT_UPDATE_MODS", "1000,100,10")
       .split(",").map(_.trim.toLong).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("graft-update-bench")
+    val cores = spark.sparkContext.defaultParallelism
     import spark.implicits._
 
     val t = SyntheticOsm.materialized(spark, sfDir)
@@ -46,7 +40,7 @@ object UpdateBench {
       t.locations.select(col("id")), t.ways.select(col("id")),
       t.relations.select(col("id")))
     val pbfDir = graft.TempDirs.create("graft-updatebench-pbf")
-    Ingest.writeExtract(t, all, pbfDir, shards = cpus.toInt,
+    Ingest.writeExtract(t, all, pbfDir, shards = cores,
       format = "osmpbf",
       headerOpts = Ingest.pbfHeaderOptions(None,
         replicationTs = Some(1600000000L), seqnum = Some(42L)))
@@ -122,7 +116,7 @@ object UpdateBench {
       .where(col("etype") === "node" &&
         graft.osm.VersionedTable.bucketExpr("id", 64) < 4)
     val (cn, cs) = timed(clustered, mods.size.toLong)
-    println(s"""{"metric":"cdc_apply","cores":$cpus,"sf":"$sfDir",""" +
+    println(s"""{"metric":"cdc_apply","cores":$cores,"sf":"$sfDir",""" +
       s""""batches":[${rows.mkString(",")}],""" +
       f""""clustered_4of64":{"changes":$cn,"seconds":${cs}%.1f}}""")
     spark.stop()

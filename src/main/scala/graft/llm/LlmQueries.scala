@@ -4966,17 +4966,15 @@ object LlmQueries {
         // to disk, as the Dedup staged builders do). NOT widened:
         // paired A/B measured widen 0.86x here — with the persist the
         // kernel runs once, and the extra exchange costs more than one
-        // pass's parallelism buys.
-        val sh0 = T(s, d, "documents")
+        // pass's parallelism buys. The cache lives for the session: the
+        // action that reads it runs in the caller, after this function
+        // returns, so no point here follows its last read. Bench's
+        // between-row sweep and Verify's per-query cleanup clear it.
+        val sh = T(s, d, "documents")
           .select($"doc_id",
             TextFunctions.ngramShingleHashes($"text", 4).as("hs"))
           .where(size($"hs") > 0)
-        // SPARK_GRAFT_Q193_PERSIST=0 restores the recompute-per-subtree
-        // shape (dev A/B lever)
-        val sh =
-          if (sys.env.get("SPARK_GRAFT_Q193_PERSIST").contains("0")) sh0
-          else sh0.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val dfr = sh.select($"doc_id", explode($"hs").as("h"))
           .groupBy($"h").agg(count(lit(1)).as("df"))
         val ranked = sh.select($"doc_id", explode($"hs").as("h"))

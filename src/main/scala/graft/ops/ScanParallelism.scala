@@ -34,13 +34,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   * kernel anyway. Deterministic under retry: round-robin repartition
   * sorts its input first (spark.sql.execution.sortBeforeRepartition,
   * on by default; guide §2.5).
-  *
-  * `SPARK_GRAFT_WIDEN=0` disables (dev A/B lever; default on).
   */
 object ScanParallelism {
-
-  private val enabled: Boolean =
-    !sys.env.get("SPARK_GRAFT_WIDEN").contains("0")
 
   private def scanBytes(p: LogicalPlan): Option[Long] = p match {
     case Project(_, c) => scanBytes(c)
@@ -57,7 +52,7 @@ object ScanParallelism {
     * that would otherwise run in fewer partitions; unchanged for
     * streaming frames and for anything that is not a bare scan. */
   def widen(df: DataFrame): DataFrame = {
-    if (!enabled || df.isStreaming) return df
+    if (df.isStreaming) return df
     scanBytes(df.queryExecution.analyzed) match {
       case Some(bytes) =>
         val spark = df.sparkSession

@@ -190,11 +190,8 @@ object Ingest {
       // expand) — data-derived below the cap, never wider than the
       // machine, and the §6 file-size band still holds (a 16 MB-source
       // partition writes a several-MB parquet file at worst).
-      // SPARK_GRAFT_EXPAND_FLOOR=one restores the r15 floor (A/B lever).
-      val floor =
-        if (sys.env.get("SPARK_GRAFT_EXPAND_FLOOR").contains("one")) 1L
-        else math.min(fallback.toLong,
-          (bytes + (16L << 20) - 1) / (16L << 20))
+      val floor = math.min(fallback.toLong,
+        (bytes + (16L << 20) - 1) / (16L << 20))
       math.max(target, math.max(1L, floor)).min(1 << 24).toInt
     }
   }

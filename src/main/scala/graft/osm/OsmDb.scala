@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
   * one [[OsmDb]] = one LMDB read transaction (`src/cmd.cpp:50`).
   */
 final class OsmDb(spark: SparkSession, root: String,
-                  forceJobPath: Boolean =
-                    sys.env.contains("SPARK_GRAFT_LOOKUP_VIA_JOB")) {
+                  forceJobPath: Boolean = false) {
 
   /** The pinned snapshot (readers are stable across later commits). */
   val snapshot: VersionedTable.Manifest =
@@ -37,9 +36,8 @@ final class OsmDb(spark: SparkSession, root: String,
     * probes on a bucketed store skip the Spark scheduler entirely (the
     * ~50 ms/job floor BASELINE.md §QD1 documents) and read the one
     * pruned bucket file directly via parquet-mr — results pinned equal
-    * to the job path by PointReaderSpec. Set env
-    * SPARK_GRAFT_LOOKUP_VIA_JOB=1 to force every probe through the
-    * Spark job path (A/B and spec use). */
+    * to the job path by PointReaderSpec. `forceJobPath` sends every
+    * probe through the Spark job path (the spec's reference path). */
   private val direct = new PointReader(root, snapshot)
   private val forceJob = forceJobPath
   @volatile private var directWarned = false

@@ -5,7 +5,8 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField,
+  StructType}
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{FileAlreadyExistsException, Files, Paths,
@@ -369,6 +370,23 @@ object VersionedTable {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
+  /** `f` over `xs` from up to four driver threads, results in order;
+    * the first failure propagates. For per-table driver work that
+    * writes nothing: resolving a snapshot read and analysing a plan. */
+  private def parallelMap[A, B](xs: Seq[A])(f: A => B): Seq[B] =
+    if (xs.sizeIs <= 1) xs.map(f)
+    else {
+      val pool = java.util.concurrent.Executors
+        .newFixedThreadPool(math.min(4, xs.size))
+      try xs.map(x => pool.submit(new java.util.concurrent.Callable[B] {
+        def call(): B = f(x)
+      })).map { fu =>
+        try fu.get()
+        catch { case e: java.util.concurrent.ExecutionException =>
+          throw e.getCause }
+      } finally { pool.shutdownNow(); () }
+    }
+
   /** Run the independent per-table write jobs of one commit from a
     * small driver thread pool (optimization-guide §2.6 "overlap
     * independent jobs"): Spark's scheduler runs several jobs at once,
@@ -381,19 +399,11 @@ object VersionedTable {
     * writes are interrupted; their partial output stays vacuum-
     * collectable under the unclaimed version, same as a sequential
     * failure's). */
-  /** Commit write-pool width. Parameterized (r16): `SPARK_GRAFT_COMMIT_POOL`
-    * overrides; `1` = strictly sequential writes (the pre-r15 shape,
-    * kept as the A/B lever the r15 verdict asked for). */
-  private def commitPoolSize: Int =
-    sys.env.get("SPARK_GRAFT_COMMIT_POOL").flatMap(_.toIntOption)
-      .filter(_ >= 1).getOrElse(4)
-
   private def parallelTableWrites[A](
       root: String, version: Long,
       sc: => org.apache.spark.SparkContext, tables: Seq[A])
       (write: A => Unit): Unit = {
-    val poolSize = math.min(commitPoolSize, tables.size)
-    if (tables.sizeIs <= 1 || poolSize <= 1) {
+    if (tables.sizeIs <= 1) {
       tables.foreach(write); return
     }
     // one cancellable job group per commit (r15 advisor): when a write
@@ -405,7 +415,8 @@ object VersionedTable {
     val context = sc
     val group = s"graft-commit-${java.util.UUID.randomUUID()}"
     val pool =
-      java.util.concurrent.Executors.newFixedThreadPool(poolSize)
+      java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(4, tables.size))
     try {
       val fs = tables.map { t =>
         pool.submit(new java.util.concurrent.Callable[Unit] {
@@ -449,12 +460,9 @@ object VersionedTable {
     * tasks carrying ~10 s of sort+encode CPU while 28 cores idled
     * (bench/r16 JobProbe); at planet scale the same rule keeps write
     * width tracking the store's declared bucket count, not whatever
-    * machine runs the commit. `SPARK_GRAFT_VT_WIDTH=session` restores
-    * the old shape (dev A/B lever). */
+    * machine runs the commit. */
   private def bucketRepartition(df: DataFrame, width: Int): DataFrame =
-    if (sys.env.get("SPARK_GRAFT_VT_WIDTH").contains("session"))
-      df.repartition(col("__bucket"))
-    else df.repartition(math.max(1, width), col("__bucket"))
+    df.repartition(math.max(1, width), col("__bucket"))
 
   /** Write all `tables` as the next version and atomically publish it
     * together with `meta` (merged over the previous version's meta).
@@ -712,6 +720,33 @@ object VersionedTable {
       Map(table -> Delta(spec.versions.indices, identity)), meta)
   }
 
+  /** The columns where `out` differs from `want`, by name and type,
+    * ignoring nullability and field metadata; empty when they match. */
+  private def schemaDrift(out: StructType, want: StructType)
+  : Seq[String] = {
+    def types(s: StructType) =
+      s.fields.map(f => f.name -> withoutNullability(f.dataType)).toMap
+    val (o, w) = (types(out), types(want))
+    (o.keySet ++ w.keySet).toSeq.sorted.collect {
+      case n if !o.contains(n) =>
+        s"$n missing (want ${want(n).dataType.simpleString})"
+      case n if !w.contains(n) =>
+        s"$n ${out(n).dataType.simpleString} not in the schema"
+      case n if o(n) != w(n) =>
+        s"$n ${out(n).dataType.simpleString} " +
+          s"(want ${want(n).dataType.simpleString})"
+    }
+  }
+
+  private def withoutNullability(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      StructField(f.name, withoutNullability(f.dataType))))
+    case a: ArrayType => ArrayType(withoutNullability(a.elementType))
+    case m: MapType => MapType(withoutNullability(m.keyType),
+      withoutNullability(m.valueType))
+    case other => other
+  }
+
   def commitDelta(spark: SparkSession, root: String,
                   deltas: Map[String, Delta],
                   meta: Map[String, String] = Map.empty,
@@ -741,25 +776,36 @@ object VersionedTable {
       // both the write pass and the manifest update below — computing
       // them twice was correct only because changedBuckets is an eager
       // Seq, and a future lazy/effectful implementation would silently
-      // diverge the written buckets from the manifest (r15 advisor)
-      val resolved = deltas.toSeq.map { case (name, d) =>
+      // diverge the written buckets from the manifest (r15 advisor).
+      // The transformed frames are built here too, in parallel like
+      // the writes, and before any write starts, so a transform whose
+      // output drifts from the table's recorded DDL (which readers
+      // trust) fails with nothing written.
+      val resolved = parallelMap(deltas.toSeq) { case (name, d) =>
         val spec = prev.buckets.getOrElse(name,
           throw new IllegalStateException(s"$name is not bucketed"))
-        (name, spec, d.changedBuckets.distinct.sorted, d.transform)
+        val changed = d.changedBuckets.distinct.sorted
+        val out = Option.when(changed.nonEmpty)(
+          d.transform(readBuckets(spark, root, name, changed, Some(prev))))
+        for (df <- out; ddl <- spec.schema) {
+          val drift = schemaDrift(df.schema, StructType.fromDDL(ddl))
+          if (drift.nonEmpty) throw new IllegalArgumentException(
+            s"commitDelta: the transform of $name does not match its " +
+              s"recorded schema: ${drift.mkString(", ")}")
+        }
+        (name, spec, changed, out)
       }
       // per-table changed-bucket rewrites are independent jobs —
       // overlap them like commit()/commitBucketed() (guide §2.6); the
       // manifest spec update below is pure driver arithmetic
       parallelTableWrites(root, next, spark.sparkContext, resolved) {
-        case (name, spec, changed, transform) =>
-        if (changed.nonEmpty) {
-          val old = readBuckets(spark, root, name, changed, Some(prev))
+        case (name, spec, changed, out) =>
+        out.foreach { df =>
           // guard: keep only rows that truly hash into the changed set,
           // so a buggy transform cannot leak rows into linked buckets
           val bucketCol = bucketExpr(spec.key, spec.nBuckets)
           bucketRepartition(
-            transform(old)
-              .withColumn("__bucket", bucketCol)
+            df.withColumn("__bucket", bucketCol)
               .where(col("__bucket")
                 .isin(changed.map(Integer.valueOf): _*)),
             changed.size)

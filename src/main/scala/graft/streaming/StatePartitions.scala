@@ -13,19 +13,10 @@ import org.apache.spark.sql.SparkSession
   * immediately afterwards is safe for the batch queries around it. */
 object StatePartitions {
 
-  /** Dev A/B lever (r16): `SPARK_GRAFT_STATE_PARTS` overrides the
-    * per-query state-partition sizing so the store-commit fixed cost
-    * can be measured without recompiling. Production keeps the
-    * call-site value (throughput-sized). */
-  private val overrideParts: Option[Int] =
-    sys.env.get("SPARK_GRAFT_STATE_PARTS").flatMap(_.toIntOption)
-      .filter(_ >= 1)
-
   def sized[A](s: SparkSession, n: Int)(startQuery: => A): A = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     try {
-      s.conf.set("spark.sql.shuffle.partitions",
-        overrideParts.getOrElse(n).toString)
+      s.conf.set("spark.sql.shuffle.partitions", n.toString)
       startQuery
     } finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }

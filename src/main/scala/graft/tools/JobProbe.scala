@@ -2,7 +2,6 @@ package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.ConcurrentHashMap
 
@@ -21,16 +20,7 @@ object JobProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val name = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1024")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession("graft-job-probe")
 
     final case class Job(start: Long, site: String, var end: Long = -1L,
                          var tasks: Int = 0, var taskMs: Long = 0L)

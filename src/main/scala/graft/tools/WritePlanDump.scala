@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -22,16 +21,7 @@ object WritePlanDump {
     val sfDir = args(0)
     val name = args(1)
     val out = Paths.get(args(2))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1024")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession("graft-write-plan-dump")
     // a bare file name has no parent directory to create
     Option(out.getParent).foreach(Files.createDirectories(_))
     Files.writeString(out, s"==== write-side plans: $name ====\n")

@@ -341,6 +341,35 @@ class ManifestSpec extends AnyFunSuite {
     assert(VersionedTable.current(root).get.version == 2L)
   }
 
+  test("a delta whose output type drifts from the recorded DDL fails " +
+    "before any write and releases its claim") {
+    import org.apache.spark.sql.functions._
+    val root = Files.createTempDirectory("graft-drift").toString
+    val df = (1L to 100L).map(i => (i, s"v$i", i * 10)).toDF("id", "v", "n")
+    VersionedTable.commitBucketed(root,
+      Map("t" -> (df, "id"), "u" -> (df, "id")), 4)
+    val all = 0 until 4
+    val e = intercept[IllegalArgumentException] {
+      VersionedTable.commitDelta(spark, root, Map(
+        "t" -> VersionedTable.Delta(all, identity),
+        "u" -> VersionedTable.Delta(all,
+          _.withColumn("n", col("n").cast("int")))))
+    }
+    assert(e.getMessage.contains("transform of u ") &&
+      e.getMessage.endsWith("schema: n int (want bigint)"), e.getMessage)
+    // nothing landed for either table, and the claim on v=2 is gone
+    assert(!Files.exists(java.nio.file.Paths.get(root, "v=2")))
+    assert(!Files.exists(java.nio.file.Paths.get(root, "manifest.v=2.json")))
+    assert(VersionedTable.current(root).get.version == 1L)
+    // nullability is not part of the check: a transform that makes a
+    // column non-null commits as v=2
+    val v2 = VersionedTable.commitDelta(spark, root, Map(
+      "u" -> VersionedTable.Delta(all,
+        _.withColumn("v", coalesce(col("v"), lit(""))))))
+    assert(v2 == 2L)
+    assert(VersionedTable.read(spark, root, "u").count() == 100L)
+  }
+
   test("an undrained commit pool keeps the claim and names the version") {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("graft-undrained").toString

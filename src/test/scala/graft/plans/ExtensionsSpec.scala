@@ -4,9 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** End-to-end test of the DEPLOYMENT wiring: a session built with
+/** End-to-end test of the DEPLOYMENT wiring: a session built by
+  * [[graft.GraftSession]], the bootstrap every graft main uses, injects
   * `.withExtensions(new GraftExtensions)` (the code path behind
-  * `spark.sql.extensions=graft.functions.GraftExtensions`) must
+  * `spark.sql.extensions=graft.functions.GraftExtensions`) and must
   * resolve every custom function from pure SQL — scalar AND
   * aggregate — and run the region-rewrite optimizer rule, with NO
   * explicit `GraftFunctions.register` call. This is how a cluster
@@ -14,27 +15,31 @@ import org.scalatest.funsuite.AnyFunSuite
   * suite exercises the per-session `register` path instead. */
 class ExtensionsSpec extends AnyFunSuite {
 
-  test("withExtensions registers functions and the region-rewrite " +
-    "rule without register()") {
-    // other suites' (finished) shared sessions must not satisfy
-    // getOrCreate — extensions only apply to a NEWLY created session.
-    // SAFETY: stopping the active session is only safe because
-    // build.sbt runs test suites SEQUENTIALLY in one forked JVM
-    // (Test / fork := true, no forked-parallel setting); if parallel
-    // forked tests are ever enabled, this must move to an isolated
-    // helper that builds its own session without touching the shared
-    // one
+  /** A session NEWLY built by GraftSession, stopped afterwards. Other
+    * suites' (finished) shared sessions must not satisfy getOrCreate —
+    * extensions and master only apply to a newly created session.
+    * SAFETY: stopping the active session is only safe because
+    * build.sbt runs test suites SEQUENTIALLY in one forked JVM
+    * (Test / fork := true, no forked-parallel setting); if parallel
+    * forked tests are ever enabled, this must move to an isolated
+    * helper that builds its own session without touching the shared
+    * one. */
+  private def withFreshSession(body: SparkSession => Unit): Unit = {
     SparkSession.getActiveSession.foreach(_.stop())
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    try {
+    val s = graft.GraftSession("graft-extensions-spec")
+    try body(s)
+    finally {
+      s.stop()
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+    }
+  }
+
+  test("withExtensions registers functions and the region-rewrite " +
+    "rule without register()") {
+    withFreshSession { s =>
       // scalar expression + TypedImperativeAggregate from pure SQL
       val r = s.sql(
         """SELECT s2_cell_id(CAST(1.0 AS DOUBLE),
@@ -62,10 +67,22 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(opt.contains("cell_in_ranges"),
         s"region-rewrite rule not active via extensions:\n$opt")
       assert(opt.contains("st_within_region"), "exact residual missing")
-    } finally {
-      s.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
+    }
+  }
+
+  test("GraftSession keeps a submitted master and leaves shuffle " +
+    "partitions unpinned") {
+    // spark-submit --master passes the master as this system property
+    val prev = sys.props.get("spark.master")
+    sys.props("spark.master") = "local[1]"
+    try withFreshSession { s =>
+      assert(s.sparkContext.master == "local[1]")
+      assert(!s.sparkContext.getConf.contains("spark.sql.shuffle.partitions"))
+      assert(s.conf.get("spark.sql.shuffle.partitions") == "200",
+        "the SQL default, not the local core count")
+    } finally prev match {
+      case Some(m) => sys.props("spark.master") = m
+      case None => sys.props -= "spark.master"
     }
   }
 }

@@ -11,7 +11,9 @@ import org.apache.spark.sql.SparkSession
   * off, ERROR log level, and a 1024-key sort-based fallback threshold
   * for object-hash aggregates (bounded-buffer aggregates such as
   * `topk_by_score` keep thousands of keys hash-resident; the 128-key
-  * default would sort whole scored partitions).
+  * default would sort whole scored partitions), and a 1024-entry
+  * generated-code cache: one `update` compiles 129-143 classes, so
+  * Spark's 100-entry default evicts classes the same call needs again.
   *
   * Only when no master was submitted (`spark-submit --master` sets the
   * `spark.master` system property): `local[cpus]` with
@@ -28,6 +30,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "1024")
+      .config("spark.sql.codegen.cache.maxEntries", "1024")
       .config("spark.ui.enabled", "false")
     val spark = (if (sys.props.contains("spark.master")) base
       else {

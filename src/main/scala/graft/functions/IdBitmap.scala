@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.types._
 
@@ -143,6 +144,13 @@ object IdBitmapImpl {
     }
   }
 
+  /** The canonical bitmap of the union of two serialized bitmaps. */
+  def union(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
+    val u = deserialize(a)
+    u.mergeFrom(deserialize(b))
+    u.serialize
+  }
+
   def deserialize(bytes: Array[Byte]): Buffer = {
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     val buf = new Buffer
@@ -204,6 +212,33 @@ final class IdBitmapProbe(bytes: Array[Byte]) extends Serializable {
   @transient private lazy val modes = index._3
   @transient private lazy val cards = index._4
   private def n: Int = keys.length
+
+  /** Number of chunks; [[chunkIds]] enumerates each. */
+  def chunks: Int = n
+
+  /** The ids of chunk `i`, ascending within the chunk. */
+  def chunkIds(i: Int): Array[Long] = {
+    val base = keys(i) << 16
+    val out = new Array[Long](cards(i))
+    var k = 0
+    if (modes(i) == 1) {
+      var w = 0
+      while (w < 1024) {
+        var bits = bb.getLong(offs(i) + (w << 3))
+        while (bits != 0L) {
+          out(k) = base | ((w << 6) + java.lang.Long.numberOfTrailingZeros(bits))
+          k += 1
+          bits &= bits - 1
+        }
+        w += 1
+      }
+    } else
+      while (k < out.length) {
+        out(k) = base | bb.getChar(offs(i) + k * 2).toLong
+        k += 1
+      }
+    out
+  }
 
   def cardinality: Long = {
     var s = 0L; var i = 0
@@ -294,10 +329,13 @@ case class BitmapAgg(child: Expression,
 
 /** `bitmap_contains(bitmap literal BINARY, id BIGINT) -> BOOLEAN`:
   * membership in a driver-built bitmap. The bitmap must be foldable (it
-  * is collected once and inlined, like `ivf_assign`'s centroid matrix);
-  * the probe structure is parsed once per plan and referenced from
-  * generated code — the per-row cost is two binary searches, no
-  * deserialization, no boxing. This is the broadcast-bitmap semi-join:
+  * is collected once and passed as a literal, like `ivf_assign`'s
+  * centroid matrix); the probe structure is parsed once per plan and
+  * generated code references only that probe object, never the literal,
+  * so the code is the same for every bitmap and only the probe ships
+  * with it. Plan strings name the bitmap by its size, not its hex bytes.
+  * The per-row cost is two binary searches, no deserialization, no
+  * boxing. This is the broadcast-bitmap semi-join:
   * `big.where(bitmap_contains(lit(bm), $"id"))` filters map-side with
   * ZERO shuffle of the big table, where a `left_semi` join would
   * shuffle or at best broadcast-hash-join it. */
@@ -315,17 +353,29 @@ case class BitmapContains(bitmap: Expression, id: Expression)
     else TypeCheckResult.TypeCheckFailure(
       "bitmap_contains expects (foldable BINARY, BIGINT)")
 
-  @transient private lazy val probe: IdBitmapProbe =
-    new IdBitmapProbe(bitmap.eval().asInstanceOf[Array[Byte]])
+  @transient private lazy val bytes: Array[Byte] =
+    bitmap.eval().asInstanceOf[Array[Byte]]
+  @transient private lazy val probe: IdBitmapProbe = new IdBitmapProbe(bytes)
+
+  override def toString: String =
+    if (bytes == null) s"$prettyName(null, $id)"
+    else s"$prettyName(<bitmap of ${probe.cardinality} ids, " +
+      s"${bytes.length} B>, $id)"
 
   override def nullSafeEval(bm: Any, idV: Any): Any =
     probe.contains(idV.asInstanceOf[Long])
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode = {
+    if (bytes == null) return ExprCode.forNullValue(BooleanType)
     val ref = ctx.addReferenceObj("graftIdBitmap", probe,
       classOf[IdBitmapProbe].getName)
-    defineCodeGen(ctx, ev, (_, idV) => s"$ref.contains($idV)")
+    val idC = id.genCode(ctx)
+    ev.copy(code = code"""
+      ${idC.code}
+      boolean ${ev.isNull} = ${idC.isNull};
+      boolean ${ev.value} = false;
+      if (!${ev.isNull}) { ${ev.value} = $ref.contains(${idC.value}); }""")
   }
 
   override protected def withNewChildrenInternal(

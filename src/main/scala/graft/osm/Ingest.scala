@@ -252,8 +252,10 @@ object Ingest {
   }
 
   /** Write an extract back out as OSM XML or binary PBF (S2): one
-    * document per entity, elements in reference order. `includeUserData
-    * = false` is `--noUserData` (`src/extract.cpp:324-328`); `format`
+    * document per entity, elements in reference order, rows selected
+    * map-side by the extract's id bitmaps ([[Extract.rows]]).
+    * `includeUserData = false` is `--noUserData`
+    * (`src/extract.cpp:324-328`); `format`
     * is the DataSource name ("osmxml" or "osmpbf" — the reference's
     * extract emits PBF, `src/extract.cpp:295`); `headerOpts` (PBF only)
     * from [[pbfHeaderOptions]]. */
@@ -263,10 +265,17 @@ object Ingest {
                    headerOpts: Map[String, String] = Map.empty)
   : Unit = {
     val noUser = lit("").as("user")
-    val nodesOut = sel.nodeIds
-      .join(t.locations, Seq("id"))
-      .join(t.nodes.select(col("id"), col("tags"), col("meta")),
-        Seq("id"), "left_outer")
+    val rows = Extract.rows(t, sel)
+    // elements in ascending id order; one shard needs no global sort: a
+    // single-partition exchange and a local sort skip the range-sampling
+    // job
+    def write(df: DataFrame, entity: String): Unit =
+      (if (shards == 1) df.repartition(1).sortWithinPartitions(col("id"))
+      else df.orderBy(col("id")).coalesce(shards))
+        .write.format(format).option("entity", entity).options(headerOpts)
+        .mode("overwrite").save(dir)
+
+    write(rows.nodes
       .select(col("id"), col("lon"), col("lat"), col("version"),
         coalesce(col("meta.timestamp"), lit(0L)).as("timestamp"),
         coalesce(if (includeUserData) col("meta.changeset") else lit(0L),
@@ -276,14 +285,9 @@ object Ingest {
         (if (includeUserData) coalesce(col("meta.user"), lit(""))
         else noUser).as("user"),
         coalesce(col("tags"),
-          map().cast("map<string,string>")).as("tags"))
-      .orderBy(col("id"))
-    nodesOut.coalesce(shards).write.format(format)
-      .option("entity", "node").options(headerOpts)
-      .mode("overwrite").save(dir)
+          map().cast("map<string,string>")).as("tags")), "node")
 
-    def entityOut(ids: DataFrame, table: DataFrame, extra: String)
-    : DataFrame = ids.join(table, Seq("id"))
+    def entityOut(table: DataFrame, extra: String): DataFrame = table
       .select(Seq(col("id"), col("meta.version").as("version"),
         col("meta.timestamp").as("timestamp"),
         (if (includeUserData) col("meta.changeset") else lit(0L))
@@ -292,14 +296,9 @@ object Ingest {
         (if (includeUserData) coalesce(col("meta.user"), lit(""))
         else noUser).as("user"),
         col("tags"), col(extra)): _*)
-      .orderBy(col("id"))
 
-    entityOut(sel.wayIds, t.ways, "nodes").coalesce(shards)
-      .write.format(format).option("entity", "way").options(headerOpts)
-      .mode("overwrite").save(dir)
-    entityOut(sel.relationIds, t.relations, "members").coalesce(shards)
-      .write.format(format).option("entity", "relation")
-      .options(headerOpts).mode("overwrite").save(dir)
+    write(entityOut(rows.ways, "nodes"), "way")
+    write(entityOut(rows.relations, "members"), "relation")
   }
 
   /** Back-compat alias for the XML flavor. */

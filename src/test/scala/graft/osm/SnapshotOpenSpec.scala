@@ -1,14 +1,11 @@
 package graft.osm
 
 import graft.streaming.Replication
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 /** Opening a pinned snapshot is driver-only work, like the reference's
@@ -43,35 +40,8 @@ class SnapshotOpenSpec extends AnyFunSuite {
   private def rows(df: DataFrame): Seq[Row] =
     df.collect().toSeq.sortBy(_.toString)
 
-  /** Runs `body` under its own job group and counts the Spark jobs it
-    * started. Listener events arrive asynchronously: a sentinel job run
-    * afterwards marks the point where every earlier event has been
-    * delivered. */
-  private def jobsIn[A](body: => A): (Int, A) = {
-    val sc = spark.sparkContext
-    val group = s"open-${java.util.UUID.randomUUID()}"
-    val sentinel = s"sentinel-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger(0)
-    val delivered = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))) match {
-          case Some(`group`) => jobs.incrementAndGet(); ()
-          case Some(`sentinel`) => delivered.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "open a snapshot")
-      val a = try body finally sc.clearJobGroup()
-      sc.setJobGroup(sentinel, "listener sentinel")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      assert(delivered.await(30, TimeUnit.SECONDS))
-      (jobs.get(), a)
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsIn[A](body: => A): (Int, A) =
+    graft.SparkJobs.jobsIn(spark)(body)
 
   private def change(id: Long, etype: String, visible: Boolean,
                      lonLat: Option[(Int, Int)] = None,

@@ -85,4 +85,11 @@ class ExtensionsSpec extends AnyFunSuite {
       case None => sys.props -= "spark.master"
     }
   }
+
+  test("GraftSession caches 1024 generated classes, not Spark's 100") {
+    withFreshSession { s =>
+      assert(s.conf.get("spark.sql.codegen.cache.maxEntries") == "1024")
+      assert(s.sessionState.conf.codegenCacheMaxEntries == 1024)
+    }
+  }
 }

@@ -21,48 +21,9 @@ class OsmXmlSpec extends AnyFunSuite {
   private def metaRow(v: Int) =
     (v, 1600000000L + v, 77L, 42L, s"user$v")
 
-  /** Tiny hand-built world:
-    * nodes 1-3 in a cluster near (10,10); node 4 far away at (50,50);
-    * node 5 untagged at (10.001, 10.001); node 6 isolated at (-20,-20).
-    * way 100 = [1,2,5]; way 101 = [4] (outside); way 102 = [3] member of
-    * a multipolygon relation. relation 200 (multipolygon) = [way 102,
-    * way 999-missing]; relation 201 = [node 6, relation 200]. */
-  private def world(): (DataFrame, DataFrame, DataFrame) = {
-    val nodes = Seq(
-      (1L, 100000000, 100000000, 1, 1600000001L, 77L, 42L, "u",
-        Map("amenity" -> "cafe")),
-      (2L, 100010000, 100010000, 1, 1600000002L, 77L, 42L, "u",
-        Map("name" -> "A & B <\"x\">")),
-      (3L, 100020000, 100020000, 2, 1600000003L, 77L, 42L, "u",
-        Map.empty[String, String]),
-      (4L, 500000000, 500000000, 1, 1600000004L, 77L, 42L, "u",
-        Map.empty[String, String]),
-      (5L, 100010001, 100010001, 3, 1600000005L, 77L, 42L, "u",
-        Map.empty[String, String]),
-      (6L, -200000000, -200000000, 1, 1600000006L, 77L, 42L, "u",
-        Map("place" -> "island"))
-    ).toDF("id", "lon", "lat", "version", "timestamp", "changeset",
-      "uid", "user", "tags")
-    val ways = Seq(
-      (100L, 1, 1600000101L, 77L, 42L, "u",
-        Map("highway" -> "path"), Seq(1L, 2L, 5L)),
-      (101L, 1, 1600000102L, 77L, 42L, "u",
-        Map.empty[String, String], Seq(4L)),
-      (102L, 2, 1600000103L, 77L, 42L, "u",
-        Map.empty[String, String], Seq(3L))
-    ).toDF("id", "version", "timestamp", "changeset", "uid", "user",
-      "tags", "nodes")
-    val rels = Seq(
-      (200L, 1, 1600000201L, 77L, 42L, "u",
-        Map("type" -> "multipolygon"),
-        Seq((102L, "way", "outer"), (999L, "way", "outer"))),
-      (201L, 1, 1600000202L, 77L, 42L, "u",
-        Map("type" -> "collection"),
-        Seq((6L, "node", "label"), (200L, "relation", "sub")))
-    ).toDF("id", "version", "timestamp", "changeset", "uid", "user",
-      "tags", "members")
-    (nodes, ways, rels)
-  }
+  /** The hand-built world of [[graft.osm.ExtractBitmapSpec.world]]. */
+  private def world(): (DataFrame, DataFrame, DataFrame) =
+    graft.osm.ExtractBitmapSpec.world(spark)
 
   test("osmxml write -> read round-trips all three entities exactly") {
     val (nodes, ways, rels) = world()

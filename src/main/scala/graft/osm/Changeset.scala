@@ -4,18 +4,22 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Batch OsmChange application (U1-U3, `src/update.cpp:17-226`) as
-  * pure DataFrame transforms: each table's new version is
-  * `old ANTI-JOIN changed-ids UNION visible-upserts`, and reverse
-  * adjacency is recomputed with delete-then-insert by parent id (the
-  * set-diff the reference computes row-by-row at `update.cpp:78-126`
-  * falls out of recomputing the changed parents' rows wholesale —
-  * cheaper on a cluster than the per-row diff, same result).
+  * pure DataFrame transforms: every table's new version is
+  * `old ANTI-JOIN changed-ids UNION visible-upserts`, one generic
+  * [[delta]] over the table's [[OsmLayout]] entry. The changed ids
+  * delete by the table's delete key (`id`, or `parent_id` for reverse
+  * adjacency), and the upserts are the rows the layout derives from the
+  * visible changes. Adjacency is thus recomputed with delete-then-insert
+  * by parent id (the set-diff the reference computes row-by-row at
+  * `update.cpp:78-126` falls out of recomputing the changed parents'
+  * rows wholesale — cheaper on a cluster than the per-row diff, same
+  * result).
   *
-  * Every table's transform is exposed as a closure in [[delta]] so the
-  * SAME logic drives both the whole-table batch form (applyNodeChanges
-  * etc., used by q33/q37) and the copy-on-write streaming form, where
-  * `old` is only the changed buckets' rows
-  * ([[VersionedTable.Delta]] / [[graft.streaming.Replication]]).
+  * The SAME layout description drives `expand` ([[Ingest]]), this
+  * whole-table batch form (applyNodeChanges etc., used by q33/q37) and
+  * the copy-on-write streaming form, where `old` is only the changed
+  * buckets' rows ([[VersionedTable.Delta]] /
+  * [[graft.streaming.Replication.applyBatch]]).
   *
   * These functions are pure (no writes): atomic visibility is the
   * manifest layer's job ([[VersionedTable]]), which also supplies the
@@ -24,79 +28,24 @@ import org.apache.spark.sql.functions._
   */
 object Changeset {
 
-  /** Per-table delta closures. `changes` carries the OsmChange rows for
-    * ONE element type; each closure maps that table's old rows (all of
-    * them, or just the changed buckets' — the transforms only ever
-    * delete rows keyed by a changed id, so restricting `old` to the
-    * buckets containing those keys is exact) to their replacements. */
-  object delta {
-    private def ids(changes: DataFrame): DataFrame =
-      changes.select(col("id")).distinct()
-
-    /** U1a: the coordinate store — every visible node, keyed by id.
-      * When the store carries the materialized `s2cell` index column
-      * (the expand layouts), upserts recompute it from the new coords —
-      * the reference's cell_node index maintenance
-      * (`src/update.cpp:62-76`). Requires
-      * [[graft.functions.GraftFunctions.register]] in that case. */
-    def locations(changes: DataFrame): DataFrame => DataFrame = old => {
-      val upserts0 = changes.where(col("visible"))
-        .select(col("id"), col("lon"), col("lat"), col("version"))
-      val upserts =
-        if (old.columns.contains("s2cell"))
-          upserts0.withColumn("s2cell", graft.spatial.SpatialScan
-            .s2CellOfFixed(col("lat"), col("lon")))
-        else upserts0
-      old.join(ids(changes), Seq("id"), "left_anti")
-        .unionByName(upserts)
-    }
-
-    /** U1b: node blobs — visible AND tagged (`update.cpp:50-60`:
-      * a visible change without tags deletes any existing blob). */
-    def nodeBlobs(changes: DataFrame): DataFrame => DataFrame = old =>
-      old.join(ids(changes), Seq("id"), "left_anti")
-        .unionByName(changes
-          .where(col("visible") && size(col("tags")) > 0)
-          .select(col("id"), col("tags"), col("meta")))
-
-    /** U2a: way table upsert. */
-    def ways(changes: DataFrame): DataFrame => DataFrame = old =>
-      old.join(ids(changes), Seq("id"), "left_anti")
-        .unionByName(changes.where(col("visible"))
-          .select(col("id"), col("nodes"), col("tags"), col("meta")))
-
-    /** U3a: relation table upsert. */
-    def relations(changes: DataFrame): DataFrame => DataFrame = old =>
-      old.join(ids(changes), Seq("id"), "left_anti")
-        .unionByName(changes.where(col("visible"))
-          .select(col("id"), col("members"), col("tags"), col("meta")))
-
-    /** U2b: node->way reverse adjacency — delete-then-insert by
-      * parent id, re-derived from the new node lists. */
-    def nodeWay(changes: DataFrame): DataFrame => DataFrame = old =>
-      old.join(ids(changes).withColumnRenamed("id", "parent_id"),
-          Seq("parent_id"), "left_anti")
-        .unionByName(changes.where(col("visible"))
-          .select(explode(col("nodes")).as("member_id"),
-            col("id").as("parent_id"))
-          .distinct()
-          .select(col("parent_id"), col("member_id")))
-        .select(col("member_id"), col("parent_id"))
-
-    /** U3b: member->relation reverse adjacency for one member type. */
-    def relAdj(changes: DataFrame, mtype: String)
-    : DataFrame => DataFrame = old =>
-      old.join(ids(changes).withColumnRenamed("id", "parent_id"),
-          Seq("parent_id"), "left_anti")
-        .unionByName(changes.where(col("visible"))
-          .select(explode(col("members")).as("m"),
-            col("id").as("parent_id"))
-          .where(col("m.mtype") === mtype)
-          .select(col("m.ref").as("member_id"), col("parent_id"))
-          .distinct()
-          .select(col("parent_id"), col("member_id")))
-        .select(col("member_id"), col("parent_id"))
-  }
+  /** Table `t`'s delta for `changes`, the OsmChange rows of ONE element
+    * type: maps the table's old rows (all of them, or just the changed
+    * buckets' — the transform only ever deletes rows keyed by a changed
+    * id, so restricting `old` to the buckets holding those keys is
+    * exact) to their replacements. Upserts carry the derived index
+    * columns `old` has: the locations `s2cell` is recomputed from the
+    * new coordinates, the reference's cell_node index maintenance
+    * (`src/update.cpp:62-76`), which needs
+    * [[graft.functions.GraftFunctions.register]]. The output keeps
+    * `old`'s column order, which the join on the delete key would
+    * otherwise lead with that key. */
+  def delta(t: OsmLayout.Table, changes: DataFrame)
+  : DataFrame => DataFrame = old =>
+    old.join(changes.select(col("id").as(t.deleteKey)).distinct(),
+        Seq(t.deleteKey), "left_anti")
+      .unionByName(t.rows(changes.where(col("visible")),
+        old.columns.contains))
+      .select(old.columns.map(col): _*)
 
   /** U1. `changes` schema: id, visible (bool), lon, lat, version, tags
     * (MAP, empty/null = untagged), meta (nullable struct like
@@ -106,14 +55,16 @@ object Changeset {
     * (`update.cpp:33-48`). */
   def applyNodeChanges(locations: DataFrame, nodes: DataFrame,
                        changes: DataFrame): (DataFrame, DataFrame) =
-    (delta.locations(changes)(locations), delta.nodeBlobs(changes)(nodes))
+    (delta(OsmLayout.Locations, changes)(locations),
+      delta(OsmLayout.Nodes, changes)(nodes))
 
   /** U2. `changes` schema: id, visible, nodes (ARRAY<LONG>), tags, meta.
     * Returns (ways', node_way'): changed parents' adjacency rows are
     * dropped and re-derived from the new node lists. */
   def applyWayChanges(ways: DataFrame, nodeWay: DataFrame,
                       changes: DataFrame): (DataFrame, DataFrame) =
-    (delta.ways(changes)(ways), delta.nodeWay(changes)(nodeWay))
+    (delta(OsmLayout.Ways, changes)(ways),
+      delta(OsmLayout.NodeWay, changes)(nodeWay))
 
   /** U3. `changes` schema: id, visible, members, tags, meta. Returns
     * (relations', node_relation', way_relation', relation_relation'). */
@@ -121,8 +72,8 @@ object Changeset {
                            wayRelation: DataFrame,
                            relationRelation: DataFrame, changes: DataFrame)
   : (DataFrame, DataFrame, DataFrame, DataFrame) =
-    (delta.relations(changes)(relations),
-      delta.relAdj(changes, "node")(nodeRelation),
-      delta.relAdj(changes, "way")(wayRelation),
-      delta.relAdj(changes, "relation")(relationRelation))
+    (delta(OsmLayout.Relations, changes)(relations),
+      delta(OsmLayout.NodeRelation, changes)(nodeRelation),
+      delta(OsmLayout.WayRelation, changes)(wayRelation),
+      delta(OsmLayout.RelationRelation, changes)(relationRelation))
 }

@@ -1,7 +1,6 @@
 package graft.osm
 
 import graft.functions.GraftFunctions
-import graft.spatial.SpatialScan
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,56 +36,27 @@ object Ingest {
   private def metaCol = struct(col("version"), col("timestamp"),
     col("changeset"), col("uid"), col("user"))
 
-  /** The 8 derived tables of one import + the replication-timestamp
-    * meta, shared by both commit layouts. Caller must run inside
-    * [[withRaws]] so each input file parses once. */
+  /** The 8 derived tables of one import ([[OsmLayout]]), shared by both
+    * commit layouts. Caller must run inside [[withRaws]] so each input
+    * file parses once. Sorted, each table is range-partitioned and
+    * sorted by its bucket key, then its delete key; `locations` by its
+    * `s2cell` index column instead, so covering scans become row-group
+    * pruning. */
   private def derive(nodesRaw: DataFrame, waysRaw: DataFrame,
                      relsRaw: DataFrame, numPartitions: Int,
                      sorted: Boolean)
-  : Map[String, DataFrame] = {
-    def sortById(df: DataFrame): DataFrame =
-      if (!sorted) df
-      else df.repartitionByRange(numPartitions, col("id"))
-        .sortWithinPartitions(col("id"))
-
-    // locations: every node, with the materialized s2cell index column
-    // (range-sorted by it in the analytic layout - covering scans
-    // become row-group pruning)
-    val locations0 = nodesRaw
-      .select(col("id"), col("lon"), col("lat"), col("version"),
-        SpatialScan.s2CellOfFixed(col("lat"), col("lon")).as("s2cell"))
-    val locations =
-      if (!sorted) locations0
-      else locations0.repartitionByRange(numPartitions, col("s2cell"))
-        .sortWithinPartitions(col("s2cell"), col("id"))
-
-    // tagged nodes only (`src/expand.cpp:156`)
-    val nodes = sortById(nodesRaw.where(size(col("tags")) > 0)
-      .select(col("id"), col("tags"), metaCol.as("meta")))
-    val ways = sortById(waysRaw
-      .select(col("id"), col("nodes"), col("tags"), metaCol.as("meta")))
-    val relations = sortById(relsRaw
-      .select(col("id"), col("members"), col("tags"),
-        metaCol.as("meta")))
-
-    def sortedAdj(df: DataFrame): DataFrame = {
-      val d = df.distinct()
-      if (!sorted) d
-      else d.repartitionByRange(numPartitions, col("member_id"))
-        .sortWithinPartitions(col("member_id"), col("parent_id"))
+  : Seq[(OsmLayout.Table, DataFrame)] = {
+    val elements = Map("node" -> nodesRaw, "way" -> waysRaw,
+      "relation" -> relsRaw)
+    OsmLayout.tables.map { t =>
+      val rows = t.rows(elements(t.etype).withColumn("meta", metaCol))
+      val order =
+        if (t == OsmLayout.Locations) Seq("s2cell", "id")
+        else Seq(t.bucketKey, t.deleteKey).distinct
+      t -> (if (!sorted) rows
+      else rows.repartitionByRange(numPartitions, col(order.head))
+        .sortWithinPartitions(order.map(col): _*))
     }
-    val nodeWay = sortedAdj(waysRaw.select(
-      explode(col("nodes")).as("member_id"), col("id").as("parent_id")))
-    def relAdj(mtype: String): DataFrame = sortedAdj(relsRaw
-      .select(explode(col("members")).as("m"), col("id").as("parent_id"))
-      .where(col("m.mtype") === mtype)
-      .select(col("m.ref").as("member_id"), col("parent_id")))
-
-    Map("locations" -> locations, "nodes" -> nodes, "ways" -> ways,
-      "relations" -> relations, "node_way" -> nodeWay,
-      "node_relation" -> relAdj("node"),
-      "way_relation" -> relAdj("way"),
-      "relation_relation" -> relAdj("relation"))
   }
 
   /** Read + persist the three raw entity frames for the duration of
@@ -150,7 +120,8 @@ object Ingest {
                else adaptivePartitions(xmlPath,
                  fallback = spark.sparkContext.defaultParallelism)
       VersionedTable.commit(root,
-        derive(n, w, r, np, sorted = true),
+        derive(n, w, r, np, sorted = true)
+          .map { case (t, df) => t.name -> df }.toMap,
         importMeta(xmlPath, n, w, r), dryRun = dryRun)
     }
 
@@ -199,25 +170,21 @@ object Ingest {
   /** Expand into the BUCKETED copy-on-write layout — the store
     * [[graft.streaming.Replication.catchUp]] consumes: subsequent
     * OsmChange commits rewrite only the buckets containing changed
-    * keys (the reference's O(changes) LMDB update). Element tables
-    * bucket on `id`, adjacency on `member_id`; rows sort by the bucket
-    * key within each bucket (point-lookup row-group pruning). The
-    * s2cell column is retained for spatial residual filters; a
-    * latency-critical spatial serving path should extract into the
-    * analytic layout instead. */
+    * keys (the reference's O(changes) LMDB update). Each table buckets
+    * on its [[OsmLayout]] bucket key (`id`, or `member_id` for
+    * adjacency); rows sort by the bucket key within each bucket
+    * (point-lookup row-group pruning). The s2cell column is retained
+    * for spatial residual filters; a latency-critical spatial serving
+    * path should extract into the analytic layout instead. */
   def expandBucketed(spark: SparkSession, xmlPath: String, root: String,
                      nBuckets: Int = 64, dryRun: Boolean = false,
                      readerOptions: Map[String, String] = Map.empty)
   : Long =
     withRaws(spark, xmlPath, readerOptions) { (n, w, r) =>
-      val tables = derive(n, w, r, numPartitions = nBuckets,
-        sorted = false)
       VersionedTable.commitBucketed(root,
-        tables.map { case (name, df) =>
-          val key = if (name.endsWith("relation") || name == "node_way")
-            "member_id" else "id"
-          name -> ((df, key))
-        }, nBuckets, importMeta(xmlPath, n, w, r), dryRun = dryRun)
+        derive(n, w, r, numPartitions = nBuckets, sorted = false)
+          .map { case (t, df) => t.name -> ((df, t.bucketKey)) }.toMap,
+        nBuckets, importMeta(xmlPath, n, w, r), dryRun = dryRun)
     }
 
   /** Load the table bundle back from a committed version. */

@@ -1218,7 +1218,7 @@ object OsmQueries {
           .select(explode(map_keys($"tags")).as("key"))
           .groupBy($"key").agg((-count(lit(1))).as("delta"))
         val plus = changes
-          .where($"visible" && size($"tags") > 0)
+          .where($"visible" && OsmLayout.tagged)
           .select(explode(map_keys($"tags")).as("key"))
           .groupBy($"key").agg(count(lit(1)).as("delta"))
         base.unionAll(minus).unionAll(plus)

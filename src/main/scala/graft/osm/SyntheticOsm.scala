@@ -246,18 +246,9 @@ object SyntheticOsm {
 
     val relations = natRel.unionByName(regRel)
 
-    // reverse adjacency (member -> parents), deduped like the
-    // reference's DUPSORT indexes
-    val nodeWay = ways
-      .select(explode($"nodes").as("member_id"), $"id".as("parent_id"))
-      .distinct()
-    def memberAdj(mtype: String): DataFrame = relations
-      .select(explode($"members").as("m"), $"id".as("parent_id"))
-      .where($"m.mtype" === mtype)
-      .select($"m.ref".as("member_id"), $"parent_id")
-      .distinct()
-
     Tables(locations, nodes, ways, relations,
-      nodeWay, memberAdj("node"), memberAdj("way"), memberAdj("relation"))
+      OsmLayout.NodeWay.rows(ways), OsmLayout.NodeRelation.rows(relations),
+      OsmLayout.WayRelation.rows(relations),
+      OsmLayout.RelationRelation.rows(relations))
   }
 }

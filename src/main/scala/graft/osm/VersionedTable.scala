@@ -453,16 +453,43 @@ object VersionedTable {
     } finally { pool.shutdownNow(); () }
   }
 
-  /** r16: bucketed commit writes repartition to EXACTLY the layout's
-    * bucket granularity instead of the session shuffle width. The
+  /** Write `df`, which carries its `__bucket` column, as one
+    * `__bucket=B/` directory per bucket under `path`, rows sorted by
+    * `key` within each bucket, at `pageRowLimit` rows per Parquet page.
+    *
+    * r16: the write repartitions to EXACTLY `width` tasks, the layout's
+    * bucket granularity, instead of the session shuffle width. The
     * column-only repartition let AQE coalesce the tiny-bucket shuffle
     * to its 64 MB advisory — the q197/q50 base commits measured as 4
     * tasks carrying ~10 s of sort+encode CPU while 28 cores idled
     * (bench/r16 JobProbe); at planet scale the same rule keeps write
     * width tracking the store's declared bucket count, not whatever
     * machine runs the commit. */
-  private def bucketRepartition(df: DataFrame, width: Int): DataFrame =
+  private def writeBuckets(df: DataFrame, key: String, width: Int,
+                           pageRowLimit: Int, path: String): Unit =
     df.repartition(math.max(1, width), col("__bucket"))
+      // (__bucket, key), NOT key alone: the dynamic-partition writer
+      // REQUIRES its output ordered by the partition column, and an
+      // ordering that doesn't lead with __bucket makes Spark insert its
+      // own non-stable sort by __bucket on top — which scrambles the
+      // key order the whole pruning ladder depends on (measured:
+      // 117K/234K inversions in a node_way bucket → every page's
+      // min/max spans the full id range → point probes decoded the
+      // entire file). Leading with __bucket satisfies the writer's
+      // requirement, so THIS sort is the only one and per-bucket key
+      // order is exact.
+      .sortWithinPartitions(col("__bucket"), col(key))
+      .write.mode("overwrite").partitionBy("__bucket")
+      // Point-read page granularity: a probe's cost floor is the
+      // record-decode of every row in the column-index-selected pages,
+      // so page row count bounds per-probe work the way a B-tree leaf
+      // bounds the reference's (`src/storage.cpp:70-77` descends to one
+      // 4K page). parquet-mr's 20K-row default made sf10 probes decode
+      // 20-40K rows (~30-50 ms); 2K rows per page keeps warm probes
+      // single-digit-ms at ANY store size while row groups (scan
+      // granularity) stay unchanged.
+      .option("parquet.page.row.count.limit", pageRowLimit.toString)
+      .parquet(path)
 
   /** Write all `tables` as the next version and atomically publish it
     * together with `meta` (merged over the previous version's meta).
@@ -545,31 +572,8 @@ object VersionedTable {
       parallelTableWrites(root, next,
         tables.head._2._1.sparkSession.sparkContext, tables.toSeq) {
         case (name, (df, key)) =>
-        bucketRepartition(
-          df.withColumn("__bucket", bucketExpr(key, nBuckets)), nBuckets)
-          // (__bucket, key), NOT key alone: the dynamic-partition
-          // writer REQUIRES its output ordered by the partition
-          // column, and an ordering that doesn't lead with __bucket
-          // makes Spark insert its own non-stable sort by __bucket on
-          // top — which scrambles the key order the whole pruning
-          // ladder depends on (measured: 117K/234K inversions in a
-          // node_way bucket → every page's min/max spans the full id
-          // range → point probes decoded the entire file). Leading
-          // with __bucket satisfies the writer's requirement, so THIS
-          // sort is the only one and per-bucket key order is exact.
-          .sortWithinPartitions(col("__bucket"), col(key))
-          .write.mode("overwrite").partitionBy("__bucket")
-          // Point-read page granularity: a probe's cost floor is the
-          // record-decode of every row in the column-index-selected
-          // pages, so page row count bounds per-probe work the way a
-          // B-tree leaf bounds the reference's (`src/storage.cpp:70-77`
-          // descends to one 4K page). parquet-mr's 20K-row default
-          // made sf10 probes decode 20-40K rows (~30-50 ms); 2K rows
-          // per page keeps warm probes single-digit-ms at ANY store
-          // size while row groups (scan granularity) stay unchanged.
-          .option("parquet.page.row.count.limit",
-            pageRowLimit.toString)
-          .parquet(s"$root/v=$next/$name")
+          writeBuckets(df.withColumn("__bucket", bucketExpr(key, nBuckets)),
+            key, nBuckets, pageRowLimit, s"$root/v=$next/$name")
       }
       if (!dryRun) {
         val bk = tables.map { case (name, (_, key)) =>
@@ -695,12 +699,6 @@ object VersionedTable {
       deleted.toSeq
   }
 
-  /** COPY-ON-WRITE delta commit: for each table, read ONLY its changed
-    * buckets' old rows, apply the delta transform, and write ONLY those
-    * buckets under `v=next`; every unchanged bucket's manifest entry
-    * keeps pointing at the file that already holds it (linked, not
-    * rewritten — byte-identical on disk). Tables without a delta carry
-    * fully forward. One atomic manifest swap publishes data + meta. */
   /** Maintenance rewrite (the lakehouse OPTIMIZE analog): re-own EVERY
     * bucket of `table` at one fresh version via an identity [[Delta]]
     * over all buckets. After many delta commits a table's buckets
@@ -747,6 +745,12 @@ object VersionedTable {
     case other => other
   }
 
+  /** COPY-ON-WRITE delta commit: for each table, read ONLY its changed
+    * buckets' old rows, apply the delta transform, and write ONLY those
+    * buckets under `v=next`; every unchanged bucket's manifest entry
+    * keeps pointing at the file that already holds it (linked, not
+    * rewritten — byte-identical on disk). Tables without a delta carry
+    * fully forward. One atomic manifest swap publishes data + meta. */
   def commitDelta(spark: SparkSession, root: String,
                   deltas: Map[String, Delta],
                   meta: Map[String, String] = Map.empty,
@@ -795,6 +799,11 @@ object VersionedTable {
         }
         (name, spec, changed, out)
       }
+      // the page granularity the store was laid out with (recorded in
+      // meta at commitBucketed time): a CDC-rewritten bucket must keep
+      // the probe-cost bound the creator chose
+      val pageRowLimit =
+        prev.meta.get(PageRowLimitKey).fold(DefaultPageRowLimit)(_.toInt)
       // per-table changed-bucket rewrites are independent jobs —
       // overlap them like commit()/commitBucketed() (guide §2.6); the
       // manifest spec update below is pure driver arithmetic
@@ -803,25 +812,11 @@ object VersionedTable {
         out.foreach { df =>
           // guard: keep only rows that truly hash into the changed set,
           // so a buggy transform cannot leak rows into linked buckets
-          val bucketCol = bucketExpr(spec.key, spec.nBuckets)
-          bucketRepartition(
-            df.withColumn("__bucket", bucketCol)
+          writeBuckets(
+            df.withColumn("__bucket", bucketExpr(spec.key, spec.nBuckets))
               .where(col("__bucket")
                 .isin(changed.map(Integer.valueOf): _*)),
-            changed.size)
-            // (__bucket, key) — see commitBucketed: leading with the
-            // partition column keeps the writer from inserting its own
-            // unstable sort that would scramble per-bucket key order
-            .sortWithinPartitions(col("__bucket"), col(spec.key))
-            .write.mode("overwrite").partitionBy("__bucket")
-            // same point-read page granularity as the store was laid
-            // out with (recorded in meta at commitBucketed time): a
-            // CDC-rewritten bucket must keep the probe-cost bound the
-            // creator chose, not a hardcoded default
-            .option("parquet.page.row.count.limit",
-              prev.meta.getOrElse(PageRowLimitKey,
-                DefaultPageRowLimit.toString))
-            .parquet(s"$root/v=$next/$name")
+            spec.key, changed.size, pageRowLimit, s"$root/v=$next/$name")
         }
       }
       val newBuckets = resolved.map { case (name, spec, changed, _) =>

@@ -1,11 +1,11 @@
 package graft.streaming
 
-import graft.osm.{Changeset, VersionedTable}
+import graft.osm.{Changeset, OsmLayout, VersionedTable}
 import graft.osm.VersionedTable.Delta
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{MapType, StructType}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Replication surface: seqnum <-> URL/timestamp utilities (F7/F8,
   * `utils/server.py:27-172`) and the continuous catch-up loop (U5,
@@ -141,8 +141,15 @@ object Replication {
       .start()
 
   /** Apply one change micro-batch as a single copy-on-write commit.
-    * Tables absent from the store's manifest are skipped, so a
-    * node-only store and the full 8-table store both work.
+    * Every table of the store that [[OsmLayout]] describes gets one
+    * [[Changeset.delta]]; tables absent from the store's manifest are
+    * skipped, so a node-only store and the full 8-table store both
+    * work. The buckets each delta rewrites come from two aggregates:
+    * one over the deduplicated batch (changed element ids, the changed
+    * parents' new members, max seqnum), one over the changed parents'
+    * old rows, read bucket-pruned (their old members) — two driver
+    * actions before [[VersionedTable.commitDelta]]. A batch whose
+    * every seqnum is null fails before anything is claimed.
     * `dryRun` computes every delta but rolls back instead of
     * publishing (the reference's default update mode,
     * `src/update.cpp:280-291`); `extraMeta` adds CLI-supplied keys
@@ -162,16 +169,11 @@ object Replication {
     // replay guard BEFORE the emptiness probe: a redelivered batch id
     // must report ReplayedBatch even when its diff is empty (otherwise
     // the CLI's EmptyDiff path would re-record an already-applied
-    // seqnum), and the manifest read is cheaper than the Spark job
-    // isEmpty runs anyway
+    // seqnum), and the manifest read is cheaper than the aggregate
+    // that finds an empty batch
     if (prev.meta.get(BatchIdKey).contains(batchId.toString))
       return ApplyResult.ReplayedBatch
-    if (batch.isEmpty) return ApplyResult.EmptyDiff(prev.version)
     val bk = prev.buckets
-    require(bk.nonEmpty,
-      s"catch-up needs a bucketed store at $root (commitBucketed)")
-    // the locations upsert recomputes the s2cell index column
-    graft.functions.GraftFunctions.register(spark)
     // Latest-version-wins dedup (A8) BEFORE applying: AvailableNow
     // coalesces many diff files into one micro-batch (up to 1000), so
     // one element can legitimately appear at several seqnums (created
@@ -213,92 +215,80 @@ object Replication {
       .where(col("_rk") === 1).drop("_rk")
       .persist()
     try {
-      val nodeCh = changes.where(col("etype") === "node")
-      val wayCh = changes.where(col("etype") === "way")
-      val relCh = changes.where(col("etype") === "relation")
-      val nodeIds = nodeCh.select(col("id")).distinct()
-      val wayIds = wayCh.select(col("id")).distinct()
-      val relIds = relCh.select(col("id")).distinct()
+      def ofType(etype: String) = changes.where(col("etype") === etype)
+      // the layout's tables this store holds; an adjacency table needs
+      // its parent element table too, whose old rows name the members
+      // it drops
+      val tables = OsmLayout.tables.filter {
+        case a: OsmLayout.Adjacency =>
+          bk.contains(a.name) && bk.contains(a.parent.name)
+        case t => bk.contains(t.name)
+      }
+      // (table, bucket) of the bucket keys in `rows`
+      def keyBuckets(t: OsmLayout.Table, rows: DataFrame): DataFrame =
+        rows.select(lit(t.name).as("table"),
+          VersionedTable.bucketExpr(t.bucketKey, bk(t.name).nBuckets)
+            .as("bucket"),
+          lit(null).cast("bigint").as("seqnum"))
+      // ONE driver action for all `parts`: a row per table, holding its
+      // bucket set and max(seqnum)
+      def bucketSets(parts: Seq[DataFrame]): Map[String, Row] =
+        if (parts.isEmpty) Map.empty
+        else parts.reduce(_ unionByName _).groupBy(col("table"))
+          .agg(collect_set(col("bucket")), max(col("seqnum"))).collect()
+          .map(r => r.getString(0) -> r).toMap
+      def buckets(sets: Map[String, Row], table: String): Seq[Int] =
+        sets.get(table).fold(Seq.empty[Int])(_.getSeq[Int](1))
 
-      val deltas = scala.collection.mutable.Map[String, Delta]()
-      // every bucketsOf is a driver ACTION — per-batch action count is
-      // the version store's fixed cost. Tables keyed the same way over
-      // the same id set share ONE job (locations+nodes both bucket the
-      // node ids by "id"; parentsOf re-asks for the ways/relations
-      // sets byId already computed). keysTag identifies WHICH id set,
-      // since all element tables share the key column name (r16).
-      val bucketJobs =
-        scala.collection.mutable.Map[(Int, String, Int), Seq[Int]]()
-      def bucketsOfCached(keysTag: Int, keys: DataFrame, key: String,
-                          nBuckets: Int): Seq[Int] =
-        bucketJobs.getOrElseUpdate((keysTag, key, nBuckets),
-          VersionedTable.bucketsOf(keys, key, nBuckets))
-      def byId(table: String, keysTag: Int, keys: DataFrame,
-               transform: DataFrame => DataFrame): Unit =
-        bk.get(table).foreach { spec =>
-          deltas += table -> Delta(
-            bucketsOfCached(keysTag, keys, spec.key, spec.nBuckets),
-            transform)
-        }
+      // Aggregate 1, over the batch: the changed element ids' buckets,
+      // the buckets of the changed parents' NEW members, and, under the
+      // table name "", max(seqnum) — whose row is missing iff the batch
+      // is empty
+      val sets = bucketSets(
+        changes.select(lit("").as("table"), lit(null).cast("int")
+          .as("bucket"), col("seqnum")) +:
+          tables.map {
+            case a: OsmLayout.Adjacency =>
+              keyBuckets(a, a.refs(ofType(a.etype).where(col("visible"))))
+            case t => keyBuckets(t, ofType(t.etype))
+          })
+      val batchRow = sets.get("") match {
+        case Some(r) => r
+        case None => return ApplyResult.EmptyDiff(prev.version)
+      }
+      require(bk.nonEmpty,
+        s"catch-up needs a bucketed store at $root (commitBucketed)")
+      for (t <- tables) require(bk(t.name).key == t.bucketKey,
+        s"${t.name} at $root is bucketed on ${bk(t.name).key}, but the " +
+          s"OSM layout buckets it on ${t.bucketKey}")
+      if (batchRow.isNullAt(2)) throw new IllegalArgumentException(
+        s"change batch $batchId for $root has no seqnum: every row's " +
+          "seqnum is null, so it cannot advance the replication " +
+          "sequence number")
+      // the locations upsert recomputes the s2cell index column
+      graft.functions.GraftFunctions.register(spark)
 
-      // U1 — coordinate store + tagged-node blobs
-      byId("locations", 0, nodeIds, Changeset.delta.locations(nodeCh))
-      byId("nodes", 0, nodeIds, Changeset.delta.nodeBlobs(nodeCh))
-      // U2a / U3a — way and relation element tables
-      byId("ways", 1, wayIds, Changeset.delta.ways(wayCh))
-      byId("relations", 2, relIds, Changeset.delta.relations(relCh))
+      // Aggregate 2, over the changed parents' OLD rows, read
+      // bucket-pruned from the pinned version (O(changes), the
+      // reference's per-way reverse lookup at `update.cpp:78-126`): the
+      // buckets of the old members an adjacency delta deletes
+      val oldParents = tables.collect { case a: OsmLayout.Adjacency =>
+        a.parent }.distinct.filter(p => buckets(sets, p.name).nonEmpty)
+        .map { p =>
+          p.name -> VersionedTable.readBuckets(spark, root, p.name,
+            buckets(sets, p.name), Some(prev))
+            .join(ofType(p.etype).select(col("id")), Seq("id"), "left_semi")
+        }.toMap
+      val oldSets = bucketSets(tables.collect {
+        case a: OsmLayout.Adjacency if oldParents.contains(a.parent.name) =>
+          keyBuckets(a, a.refs(oldParents(a.parent.name)))
+      })
 
-      // U2b/U3b — reverse adjacency. The buckets to rewrite are the
-      // ones holding the changed parents' OLD member rows plus the NEW
-      // member rows; the old member ids come from the changed parents'
-      // own element rows (read partition-pruned from the pinned
-      // version — O(changes), the reference's per-way reverse lookup
-      // at `update.cpp:78-126`).
-      def parentsOf(elemTable: String, keysTag: Int, elemIds: DataFrame)
-      : Option[DataFrame] =
-        bk.get(elemTable).map { elemSpec =>
-          val parentBuckets = bucketsOfCached(keysTag, elemIds,
-            elemSpec.key, elemSpec.nBuckets)
-          VersionedTable.readBuckets(spark, root, elemTable,
-            parentBuckets, Some(prev)).join(elemIds, Seq("id"))
-        }
-      def adjDelta(adjTable: String, oldParentRows: Option[DataFrame],
-                   oldMembers: DataFrame => DataFrame,
-                   newMembers: DataFrame,
-                   transform: DataFrame => DataFrame): Unit =
-        for (spec <- bk.get(adjTable); oldParents <- oldParentRows) {
-          val memberIds = oldMembers(oldParents)
-            .unionByName(newMembers).distinct()
-          deltas += adjTable -> Delta(
-            VersionedTable.bucketsOf(memberIds, spec.key, spec.nBuckets),
-            transform)
-        }
-
-      adjDelta("node_way", parentsOf("ways", 1, wayIds),
-        old => old.select(explode(col("nodes")).as("member_id")),
-        wayCh.where(col("visible"))
-          .select(explode(col("nodes")).as("member_id")),
-        Changeset.delta.nodeWay(wayCh))
-      def relMembers(df: DataFrame, mtype: String): DataFrame = df
-        .select(explode(col("members")).as("m"))
-        .where(col("m.mtype") === mtype)
-        .select(col("m.ref").as("member_id"))
-      // the changed relations' old rows are identical for all three
-      // member types: read the pruned buckets ONCE and cache across
-      // the three adjacency deltas (the bucketsOf actions inside
-      // adjDelta materialize eagerly, so the unpersist below is safe)
-      val relParents = parentsOf("relations", 2, relIds).map(
-        _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      for (mtype <- Seq("node", "way", "relation"))
-        adjDelta(s"${mtype}_relation", relParents,
-          old => relMembers(old, mtype),
-          relMembers(relCh.where(col("visible")), mtype),
-          Changeset.delta.relAdj(relCh, mtype))
-      relParents.foreach(_.unpersist(blocking = false))
-
-      val maxSeq = changes.agg(max("seqnum")).head().getLong(0)
-      VersionedTable.commitDelta(spark, root, deltas.toMap, Map(
-        SeqKey -> maxSeq.toString,
+      VersionedTable.commitDelta(spark, root, tables.map { t =>
+        t.name -> Delta(buckets(sets, t.name) ++ buckets(oldSets, t.name),
+          Changeset.delta(t, ofType(t.etype)))
+      }.toMap, Map(
+        SeqKey -> batchRow.getLong(2).toString,
         BatchIdKey -> batchId.toString) ++ extraMeta, dryRun = dryRun)
       ApplyResult.Applied
     } finally { changes.unpersist(blocking = false); () }

@@ -172,6 +172,29 @@ class StreamingSpec extends AnyFunSuite {
     assert(loc.contains((2L, 20, 20)))
   }
 
+  test("a change batch with no seqnum fails naming it, before any claim") {
+    val root = Files.createTempDirectory("graft-repl-noseq").toString
+    VersionedTable.commitBucketed(root, Map(
+      "locations" -> (Seq((1L, 10, 10, 1), (2L, 20, 20, 1))
+        .toDF("id", "lon", "lat", "version"), "id")),
+      nBuckets = 4,
+      meta = Map("osmosis_replication_sequence_number" -> "0"))
+    val before = VersionedTable.current(root).get.version
+    val batch = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(
+        Row(1L, "node", true, 11, 11, 2, null, null, null, null, null),
+        Row(2L, "node", false, 0, 0, 2, null, null, null, null, null))),
+      Replication.changeSchema)
+    val e = intercept[IllegalArgumentException](
+      Replication.applyBatch(spark, root, batch, 5L))
+    assert(e.getMessage.contains("seqnum") &&
+      e.getMessage.contains("batch 5") && e.getMessage.contains(root),
+      e.getMessage)
+    assert(VersionedTable.current(root).get.version == before)
+    assert(!Files.exists(
+      java.nio.file.Paths.get(root, s"manifest.v=${before + 1}.json")))
+  }
+
   test("file ingest -> bucketed store -> streaming catch-up, end to end") {
     import org.apache.spark.sql.functions._
     import graft.osm.Ingest

@@ -14,6 +14,9 @@ import org.apache.spark.sql.SparkSession
   * default would sort whole scored partitions), and a 1024-entry
   * generated-code cache: one `update` compiles 129-143 classes, so
   * Spark's 100-entry default evicts classes the same call needs again.
+  * Spark fixes that size once per JVM, from the first session that
+  * generates code, so an embedder that builds its own session first
+  * keeps the 100.
   *
   * Only when no master was submitted (`spark-submit --master` sets the
   * `spark.master` system property): `local[cpus]` with

@@ -75,10 +75,9 @@ object Extract {
     // tagged type=multipolygon (`:243-260`); J7 keeps only the ones that
     // exist
     val Seq(mpRefs) = sets(in(relations, t.relations, "id").map(
-      _.where(element_at(col("tags"), "type") === "multipolygon")
-        .select(explode(col("members")).as("m"))
-        .where(col("m.mtype") === "way")
-        .select(col("m.ref").as("ref"))),
+      rels => OsmLayout.WayRelation.refs(
+        rels.where(element_at(col("tags"), "type") === "multipolygon"))
+        .select(col("member_id").as("ref"))),
       col("ref"))
 
     // J7: way completion — the selected ways that exist and every node

@@ -267,10 +267,4 @@ object Ingest {
     write(entityOut(rows.ways, "nodes"), "way")
     write(entityOut(rows.relations, "members"), "relation")
   }
-
-  /** Back-compat alias for the XML flavor. */
-  def writeExtractXml(t: SyntheticOsm.Tables, sel: Extract.Selected,
-                      dir: String, includeUserData: Boolean = true,
-                      shards: Int = 1): Unit =
-    writeExtract(t, sel, dir, includeUserData, shards, "osmxml")
 }

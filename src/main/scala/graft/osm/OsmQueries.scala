@@ -385,7 +385,7 @@ object OsmQueries {
           t.locations.select($"id"), t.ways.select($"id"),
           t.relations.select($"id"))
         val xmlDir = graft.TempDirs.create("graft-q38-xml")
-        Ingest.writeExtractXml(t, all, xmlDir, shards = 8)
+        Ingest.writeExtract(t, all, xmlDir, shards = 8)
         val root = graft.TempDirs.create("graft-q38-db")
         Ingest.expand(s, xmlDir, root)
         Ingest.readTables(s, root).locations
@@ -1312,16 +1312,16 @@ object OsmQueries {
               coalesce(countDistinct($"parent"), lit(0L))
                 .as("n_parents"))
             .select(lit(kind).as("kind"), $"n_dangling", $"n_parents")
-        val wayNode = t.ways
-          .select($"id".as("parent"), explode($"nodes").as("id"))
-        def relMembers(mtype: String) = t.relations
-          .select($"id".as("parent"), explode($"members").as("m"))
-          .where($"m.mtype" === mtype)
-          .select($"parent", $"m.ref".as("id"))
-        audit("way_node", wayNode, locIds)
-          .unionAll(audit("rel_node", relMembers("node"), locIds))
-          .unionAll(audit("rel_way", relMembers("way"), wayIds))
-          .unionAll(audit("rel_relation", relMembers("relation"), relIds))
+        def refs(adj: OsmLayout.Adjacency,
+                 parents: org.apache.spark.sql.DataFrame) =
+          adj.refs(parents)
+            .select($"parent_id".as("parent"), $"member_id".as("id"))
+        import OsmLayout._
+        audit("way_node", refs(NodeWay, t.ways), locIds)
+          .unionAll(audit("rel_node", refs(NodeRelation, t.relations), locIds))
+          .unionAll(audit("rel_way", refs(WayRelation, t.relations), wayIds))
+          .unionAll(audit("rel_relation",
+            refs(RelationRelation, t.relations), relIds))
           .orderBy($"kind")
       },
       Some(s"""WITH $dOsmCtes,

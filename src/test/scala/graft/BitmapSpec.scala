@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.{IdBitmapImpl, IdBitmapProbe}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,14 +9,7 @@ import scala.util.Random
 /** The Roaring-style ID-set bitmap (SURVEY §2.9 / A1,
   * `src/extract.cpp:149-151`): kernel properties plus the Spark
   * aggregate + probe round trip and the BitmapSemi plan shape. */
-class BitmapSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
+class BitmapSpec extends AnyFunSuite with TestSession {
   import spark.implicits._
 
   test("buffer round-trips arbitrary long sets incl. container switch") {
@@ -60,7 +52,6 @@ class BitmapSpec extends AnyFunSuite {
   }
 
   test("bitmap_agg/bitmap_contains equal an IN-subquery on Spark") {
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new Random(9)
     val big = (1L to 20000L).toDF("id").repartition(4)
     val small = (1 to 700).map(_ => (rnd.nextInt(25000) + 1).toLong)
@@ -80,7 +71,6 @@ class BitmapSpec extends AnyFunSuite {
 
   test("bitmap path is a map-side filter (no join), and the size gate " +
     "falls back to left_semi") {
-    graft.functions.GraftFunctions.register(spark)
     // Range (not LocalRelation) so ConvertToLocalRelation can't fold
     // the filter away before we inspect the plan
     val big = spark.range(1, 1001).toDF("id")

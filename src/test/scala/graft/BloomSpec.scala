@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.{BloomImpl, BloomProbe}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FilterExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
@@ -15,14 +14,7 @@ import scala.util.Random
   * q108 plan shape (probe filter BELOW the verify join's exchange),
   * and the exactness guarantee under a deliberately undersized filter
   * (false positives MUST be killed by the verify join). */
-class BloomSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
+class BloomSpec extends AnyFunSuite with TestSession {
   import spark.implicits._
 
   test("kernel: no false negatives; FP rate near theoretical at 10 b/key") {
@@ -60,7 +52,6 @@ class BloomSpec extends AnyFunSuite {
   }
 
   test("bloom_agg over partitions + bloom_contains finds every member") {
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new Random(13)
     val keys = (1 to 4000).map(_ => rnd.nextLong()).distinct
     val df = keys.toDF("h").repartition(4)

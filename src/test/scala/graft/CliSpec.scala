@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.io.ByteArrayOutputStream
@@ -11,15 +10,8 @@ import java.nio.file.Files
   * updated (dry-run, then committed) with an OsmChange doc — the same
   * lifecycle as the reference's `osmx expand/extract/update/query`
   * (`src/cmd.cpp:9-14`). */
-class CliSpec extends AnyFunSuite {
+class CliSpec extends AnyFunSuite with TestSession {
   private val SF = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   import spark.implicits._
 

@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.{CmsImpl, CmsProbe}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FilterExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
@@ -15,14 +14,7 @@ import scala.util.Random
   * the Spark aggregate round trip, the q110 plan shape, and exactness
   * of heavy-hitter output under a deliberately tiny (collision-heavy)
   * sketch. */
-class CmsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
+class CmsSpec extends AnyFunSuite with TestSession {
   import spark.implicits._
 
   test("kernel: estimate >= true count for every key, exact when wide") {
@@ -72,7 +64,6 @@ class CmsSpec extends AnyFunSuite {
 
   test("cms_agg over partitions estimates every key's count exactly " +
     "when wide, and never under when narrow") {
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new Random(24)
     val keys = (1 to 3000).map(_ => rnd.nextLong() % 200)
     val df = keys.toDF("h").repartition(4)

@@ -1,6 +1,5 @@
 package graft.llm
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
@@ -8,17 +7,7 @@ import java.nio.file.Files
 /** The ANN index is a real index: stored partitioned by signature, a
   * query's signature predicate prunes partitions at plan time instead of
   * scanning the corpus (the r2 verdict's "not an index, a slow scan"). */
-class AnnIndexSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.GraftFunctions.register(s)
-    s
-  }
-
+class AnnIndexSpec extends AnyFunSuite with graft.TestSession {
   import spark.implicits._
 
   test("partitioned signature index prunes the scan and agrees with brute force") {

@@ -1,23 +1,14 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class LlmSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
+class LlmSpec extends AnyFunSuite with graft.TestSession {
   import spark.implicits._
 
-  private def docs(rows: (Long, String)*): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
+  private def docs(rows: (Long, String)*): DataFrame =
     rows.toDF("doc_id", "text")
-  }
 
   test("exactDedup keeps the lowest id per normalized content") {
     val d = docs(
@@ -121,7 +112,6 @@ class LlmSpec extends AnyFunSuite {
   }
 
   test("inter_size_sorted: merge-intersection count over sorted arrays") {
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq((Seq(1L, 3L, 5L, 9L), Seq(3L, 5L, 7L)),
       (Seq.empty[Long], Seq(1L, 2L)),
       (Seq(2L, 4L), Seq(2L, 4L))).toDF("a", "b")
@@ -328,7 +318,6 @@ class LlmSpec extends AnyFunSuite {
 
   test("multimodal: typed feature extraction and frame sampling") {
     import Multimodal._
-    graft.functions.GraftFunctions.register(spark)
     val assets = Seq(
       Asset(1L, "image", "0123456789abcdef".getBytes, 64, 48, 1000L),
       Asset(2L, "audio", Array.emptyByteArray, 0, 0, 0L))
@@ -654,10 +643,8 @@ class LlmSpec extends AnyFunSuite {
     ))
   }
 
-  private def vecs(rows: (Long, Seq[Float])*): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
+  private def vecs(rows: (Long, Seq[Float])*): DataFrame =
     rows.toDF("vec_id", "embedding")
-  }
 
   test("kmeans separates two obvious blobs and is partition-invariant") {
     // blob A hugs e1, blob B hugs e2; ids interleaved so first-k init
@@ -862,7 +849,6 @@ class LlmSpec extends AnyFunSuite {
       .select($"id".as("doc_id"), lit(boiler).as("text"))
       .write.mode("overwrite").parquet(dir)
     val d = spark.read.parquet(dir)
-    graft.functions.GraftFunctions.register(spark)
     val sh = d.select($"doc_id",
       TextFunctions.ngramShingleHashes($"text", 3).as("sh"))
     val est = sh.queryExecution.optimizedPlan.stats.sizeInBytes

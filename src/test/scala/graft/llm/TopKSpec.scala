@@ -1,6 +1,5 @@
 package graft.llm
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,17 +10,7 @@ import graft.functions.TopKImpl
   * score DESC, id ASC)) <= k`) — the q92/q119/q151/q160 oracles pin
   * the exact edge set, so any ordering or tie divergence is a
   * correctness failure, not a perf trade. */
-class TopKSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.GraftFunctions.register(s)
-    s
-  }
-
+class TopKSpec extends AnyFunSuite with graft.TestSession {
   test("buffer: ordering, capacity, tie-to-smallest-id") {
     val b = new TopKImpl.Buffer(3)
     b.add(10L, 0.5); b.add(11L, 0.9); b.add(12L, 0.1); b.add(13L, 0.9)

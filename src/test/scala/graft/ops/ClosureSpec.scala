@@ -1,17 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Transitive-closure fixpoint (J5) — adaptive driver/distributed
   * dispatch, including the seed-side budget gate. */
-class ClosureSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ClosureSpec extends AnyFunSuite with graft.TestSession {
   import spark.implicits._
 
   private def reach(seeds: Seq[Long], edges: Seq[(Long, Long)],

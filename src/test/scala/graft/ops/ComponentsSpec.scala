@@ -1,17 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Connected components (large-star/small-star + adaptive driver
   * union-find) — the dedup-cluster labeling step. */
-class ComponentsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ComponentsSpec extends AnyFunSuite with graft.TestSession {
   import spark.implicits._
 
   private def labelsOf(edges: Seq[(Long, Long)], driverLimit: Long)

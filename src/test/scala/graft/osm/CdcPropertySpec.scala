@@ -1,7 +1,7 @@
 package graft.osm
 
 import graft.streaming.Replication
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -29,13 +29,7 @@ import scala.util.Random
   * (blob create/delete, `update.cpp:50-60`), node moves, way node-list
   * rewrites, relation member churn across all three member types.
   */
-class CdcPropertySpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class CdcPropertySpec extends AnyFunSuite with graft.TestSession {
   // ---------- model ----------
 
   private sealed trait Op {

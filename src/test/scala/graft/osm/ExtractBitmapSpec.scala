@@ -16,14 +16,7 @@ import java.nio.file.Files
   * [[Extract.materialize]] output — with bitmaps, and with the bitmap
   * cap forced to 0 so every set takes the `left_semi` fallback. Plus
   * the job count of a CLI extract on an 8-bucket store. */
-class ExtractBitmapSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ExtractBitmapSpec extends AnyFunSuite with graft.TestSession {
   import spark.implicits._
 
   private val SF = "/root/testdata/sf0.001"

@@ -1,6 +1,5 @@
 package graft.osm
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
@@ -25,13 +24,7 @@ import scala.util.Random
   * (`src/storage.cpp:6-19`); here delivered on a plain filesystem by
   * commit-time CAS claims and `vacuum(retainVersions)`.
   */
-class HistoryPropertySpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class HistoryPropertySpec extends AnyFunSuite with graft.TestSession {
   import spark.implicits._
 
   /** Expected rows per table at one published version. */

@@ -1,20 +1,13 @@
 package graft.osm
 
 import graft.streaming.Replication
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
 
 /** MVCC manifest contract (S4-lite/P6/U4) + replication utilities
   * (F7/F8). */
-class ManifestSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ManifestSpec extends AnyFunSuite with graft.TestSession {
   import spark.implicits._
 
   test("read-at-version-N is stable while N+1 is committed") {

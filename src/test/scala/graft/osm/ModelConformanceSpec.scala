@@ -1,20 +1,13 @@
 package graft.osm
 
 import graft.model.Model
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Model]] is the engine's canonical schema contract (SURVEY §1.4);
   * every producer of the OSM table bundle must conform to it. Names and
   * types must match exactly (nullability is producer-specific). */
-class ModelConformanceSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ModelConformanceSpec extends AnyFunSuite with graft.TestSession {
   private def stripNull(dt: DataType): DataType =
     DataType.fromJson(dt.json.replaceAll(
       "\"nullable\":(true|false)", "\"nullable\":true")
@@ -46,7 +39,6 @@ class ModelConformanceSpec extends AnyFunSuite {
   test("Queries.T loads events.ts identically across parquet encodings") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     val base = java.nio.file.Files.createTempDirectory("events-enc")
       .toFile.getAbsolutePath
     val us = Seq(0L, 946684800000000L, 1700000000000000L, 1700000000123456L)
@@ -76,7 +68,6 @@ class ModelConformanceSpec extends AnyFunSuite {
   test("Queries.T normalizes NTZ timestamp columns in every table") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     val base = java.nio.file.Files.createTempDirectory("orders-enc")
       .toFile.getAbsolutePath
     val us = Seq(0L, 1700000000123456L)

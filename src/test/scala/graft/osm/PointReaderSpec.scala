@@ -1,6 +1,5 @@
 package graft.osm
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,13 +10,7 @@ import java.util.concurrent.atomic.AtomicInteger
   * serving answer): results must be EQUAL to the Spark job path over
   * the same pinned snapshot, and the direct path must schedule ZERO
   * Spark jobs. */
-class PointReaderSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PointReaderSpec extends AnyFunSuite with graft.TestSession {
   import spark.implicits._
 
   /** A store exercising every decode shape: extra physical column

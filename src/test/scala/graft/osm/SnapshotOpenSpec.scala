@@ -1,7 +1,7 @@
 package graft.osm
 
 import graft.streaming.Replication
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,13 +14,7 @@ import scala.jdk.CollectionConverters._
   * by listing, so no Spark job runs until a query does. The recorded
   * DDL must therefore describe the data files exactly, and manifests
   * without one keep footer inference. */
-class SnapshotOpenSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SnapshotOpenSpec extends AnyFunSuite with graft.TestSession {
   import spark.implicits._
 
   private val tables = Seq("locations", "nodes", "ways", "relations",

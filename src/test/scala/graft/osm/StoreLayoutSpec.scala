@@ -4,7 +4,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -34,13 +33,7 @@ import scala.jdk.CollectionConverters._
   * scramble precondition) and >2000 rows per bucket (so the page
   * limit is observable), with ids fed in reverse so order must come
   * from the sort, not the input. */
-class StoreLayoutSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class StoreLayoutSpec extends AnyFunSuite with graft.TestSession {
   import spark.implicits._
 
   private val nBuckets = 8

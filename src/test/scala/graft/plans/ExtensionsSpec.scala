@@ -1,6 +1,8 @@
 package graft.plans
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,8 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * resolve every custom function from pure SQL — scalar AND
   * aggregate — and run the region-rewrite optimizer rule, with NO
   * explicit `GraftFunctions.register` call. This is how a cluster
-  * operator wires the library for SQL-only consumers; every other
-  * suite exercises the per-session `register` path instead. */
+  * operator wires the library for SQL-only consumers, and every other
+  * suite runs on such a session ([[graft.TestSession]]). The last test
+  * covers the other way in: a plain session built elsewhere (the
+  * driver harness, osmbench) relies on the library's own `register`
+  * calls. */
 class ExtensionsSpec extends AnyFunSuite {
 
   /** A session NEWLY built by GraftSession, stopped afterwards. Other
@@ -24,11 +29,15 @@ class ExtensionsSpec extends AnyFunSuite {
     * forked tests are ever enabled, this must move to an isolated
     * helper that builds its own session without touching the shared
     * one. */
-  private def withFreshSession(body: SparkSession => Unit): Unit = {
+  private def withFreshSession(body: SparkSession => Unit): Unit =
+    withFresh(graft.GraftSession("graft-extensions-spec"))(body)
+
+  private def withFresh(build: => SparkSession)
+                       (body: SparkSession => Unit): Unit = {
     SparkSession.getActiveSession.foreach(_.stop())
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = graft.GraftSession("graft-extensions-spec")
+    val s = build
     try body(s)
     finally {
       s.stop()
@@ -86,10 +95,39 @@ class ExtensionsSpec extends AnyFunSuite {
     }
   }
 
+  /** Spark sizes its generated-class cache once per JVM, from the
+    * first session that generates code, so this checks the cache the
+    * test JVM really has: 150 distinct projections fit in 1024 entries,
+    * and thrash Spark's default 100. */
   test("GraftSession caches 1024 generated classes, not Spark's 100") {
     withFreshSession { s =>
-      assert(s.conf.get("spark.sql.codegen.cache.maxEntries") == "1024")
-      assert(s.sessionState.conf.codegenCacheMaxEntries == 1024)
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+      def pass(): Long = {
+        val before = compiles.getCount
+        (1 to 150).foreach(i =>
+          s.range(3).selectExpr(s"id * $i + ${i * 7} AS v").collect())
+        compiles.getCount - before
+      }
+      assert(pass() > 0, "the first pass must generate code")
+      val again = pass()
+      assert(again == 0,
+        s"the second pass recompiled $again classes: the cache is too small")
+    }
+  }
+
+  /** The one session in the suite built without [[graft.GraftSession]]:
+    * no extensions and no `register` call here, as the driver harness
+    * and osmbench build theirs. The flagship query must still resolve
+    * graft's functions through the library's own `register` calls. It
+    * runs last so that a JVM starting on this spec sizes its codegen
+    * cache from a GraftSession, as the test above needs. */
+  test("a plain session runs the flagship extract") {
+    withFresh(SparkSession.builder().master("local[4]")
+      .appName("graft-plain-session").getOrCreate()) { s =>
+      assert(s.sessionState.functionRegistry
+        .lookupFunction(FunctionIdentifier("s2_cell_id")).isEmpty,
+        "the plain session must start without graft's functions")
+      assert(graft.SparkEntry.entry(s).count() > 0)
     }
   }
 }

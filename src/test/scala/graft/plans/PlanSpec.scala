@@ -1,7 +1,6 @@
 package graft.plans
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan assertions for the scale-critical query shapes: the
@@ -9,19 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * pushdown are checked against the ACTUAL plans, so a regression in
   * join strategy or scan pruning fails CI instead of silently turning
   * into a shuffle at 100 TB. Runs on sf0.001 — plan shape, not speed. */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with graft.TestSession {
   private val SF = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    graft.functions.GraftFunctions.register(s)
-    s
-  }
 
   private def q(name: String) = SparkEntry.queries(name)(spark, SF)
 

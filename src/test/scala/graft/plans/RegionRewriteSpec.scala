@@ -1,23 +1,14 @@
 package graft.plans
 
-import graft.functions.GraftFunctions
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The region-rewrite optimizer rule: exact `st_within_region` filters
   * gain a covering-range prune, without changing results. */
-class RegionRewriteSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class RegionRewriteSpec extends AnyFunSuite with graft.TestSession {
   import spark.implicits._
 
   private lazy val points = {
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(9)
     val dir = java.nio.file.Files
       .createTempDirectory("graft-rr").toString

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.osm.{Extract, Ingest, SyntheticOsm, VersionedTable}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,13 +9,7 @@ import java.nio.file.Files
 
 /** S1/S2 DataSource + expand/extract round trip (the SURVEY §5 property:
   * extract(expand(x)) is topology-complete and re-expandable). */
-class OsmXmlSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class OsmXmlSpec extends AnyFunSuite with graft.TestSession {
   import spark.implicits._
 
   private def metaRow(v: Int) =
@@ -412,7 +406,7 @@ class OsmXmlSpec extends AnyFunSuite {
 
     // write the extract as XML, re-expand it, and the element sets match
     val outDir = Files.createTempDirectory("graft-extract").toString
-    Ingest.writeExtractXml(t, sel, outDir)
+    Ingest.writeExtract(t, sel, outDir)
     val root2 = Files.createTempDirectory("graft-db2").toString
     Ingest.expand(spark, outDir, root2, numPartitions = 2)
     val t2 = Ingest.readTables(spark, root2)
@@ -424,7 +418,7 @@ class OsmXmlSpec extends AnyFunSuite {
       .as[Seq[Long]].head() == Seq(1L, 2L, 5L))
     // --noUserData strips changeset/uid/user
     val gdprDir = Files.createTempDirectory("graft-gdpr").toString
-    Ingest.writeExtractXml(t, sel, gdprDir, includeUserData = false)
+    Ingest.writeExtract(t, sel, gdprDir, includeUserData = false)
     val gdprNodes = spark.read.format("osmxml").option("entity", "node")
       .load(gdprDir)
     assert(gdprNodes.agg(max($"changeset"), max($"uid")).head()

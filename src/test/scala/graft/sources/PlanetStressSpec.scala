@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.osm.{Extract, Ingest}
 import graft.sources.OsmXmlCodec.{RawNode, RawRelation, RawWay}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,13 +12,7 @@ import java.nio.file.Files
   * the blob-range split reader and extracted end-to-end. Asserts the
   * parallelism shape (many partitions from one file; driver holds only
   * the <=1024-cell covering) and exact counts. */
-class PlanetStressSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PlanetStressSpec extends AnyFunSuite with graft.TestSession {
   import spark.implicits._
 
   private val NumNodes = 50000
@@ -119,7 +112,6 @@ class PlanetStressSpec extends AnyFunSuite {
       graft.spatial.BboxRegion(0.0, 0.0, 20.0, 40.0)))
     val ranges = graft.spatial.Coverer.coveringRanges(region)
     assert(ranges.size <= 1024)
-    graft.functions.GraftFunctions.register(spark)
     val cell = graft.spatial.SpatialScan.s2CellOfFixed($"lat", $"lon")
     val seeds = t.locations
       .where(graft.spatial.SpatialScan.cellInRanges(cell, ranges))

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.osm.VersionedTable
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,13 +19,7 @@ import scala.util.Random
   * for each table the buckets the new manifest owns at the new version
   * must be exactly the reference's set. Plus the job count of one such
   * apply. */
-class ApplyBucketsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ApplyBucketsSpec extends AnyFunSuite with graft.TestSession {
   private val NBuckets = 8
   private val MTypes = Seq("node", "way", "relation")
   private val metaT = "struct<version:int,timestamp:bigint," +

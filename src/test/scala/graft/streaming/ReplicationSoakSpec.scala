@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.osm.VersionedTable
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
@@ -30,13 +30,7 @@ import scala.util.Random
   *     pinned or in-flight reader needs; a tight-retention vacuum
   *     AFTER the storm prunes history and keeps current readable.
   */
-class ReplicationSoakSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ReplicationSoakSpec extends AnyFunSuite with graft.TestSession {
   import spark.implicits._
 
   private val metaT = "struct<version:int,timestamp:bigint," +

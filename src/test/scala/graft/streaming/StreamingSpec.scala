@@ -1,20 +1,14 @@
 package graft.streaming
 
 import graft.osm.VersionedTable
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
 
 /** U5: replication catch-up via Structured Streaming with exactly-once
   * manifest commits. */
-class StreamingSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class StreamingSpec extends AnyFunSuite with graft.TestSession {
   import spark.implicits._
 
   private def writeChanges(dir: String, name: String,

@@ -427,10 +427,11 @@ object Queries {
           .select(($"l_partkey" % 97).as("child"),
             ($"l_orderkey" % 97).as("parent"))
           .distinct()
-        val seeds = s.range(1, 4).select($"id") // ids 1,2,3
+        val Seq(seeds) = graft.ops.BitmapSemi.idSets(
+          s.range(1, 4).select($"id"), Seq($"id")) // ids 1,2,3
         graft.ops.Closure.reachable(seeds, edges,
           childCol = "child", parentCol = "parent")
-          .orderBy($"id")
+          .ids(s).orderBy($"id")
       },
       Some("""WITH RECURSIVE
              |edges AS (SELECT DISTINCT l_partkey % 97 AS child,

@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions.{call_function, col, lit}
   * extract stage accumulates IDs into a bitmap, then later stages test
   * membership against it). [[graft.osm.Extract]] builds every id set
   * of an extract with [[idSets]] and selects its rows with
-  * [[IdSet.filter]]; q56 uses [[filterIn]].
+  * [[IdSet.filter]], [[Closure]] grows its sets with [[IdSet.filterNot]],
+  * and q56 uses [[filterIn]].
   *
   * `big WHERE key IN (ids)` normally plans as a `left_semi` join —
   * broadcast-hash at best (a boxed-Long hash set per executor), a full
@@ -42,6 +43,10 @@ object BitmapSemi {
     /** Rows of `big` whose `key` is in the set. */
     def filter(big: DataFrame, key: Column): DataFrame
 
+    /** Rows of `big` whose `key` is not in the set, null keys included
+      * (as a `left_anti` join keeps them). */
+    def filterNot(big: DataFrame, key: Column): DataFrame
+
     /** The ids as one distinct BIGINT column `id`. */
     def ids(spark: SparkSession): DataFrame
 
@@ -57,12 +62,16 @@ object BitmapSemi {
     def isEmpty: Boolean = probe.chunks == 0
 
     def filter(big: DataFrame, key: Column): DataFrame =
-      if (isEmpty) big.where(lit(false))
-      else {
-        GraftFunctions.register(big.sparkSession)
-        big.where(call_function("bitmap_contains", lit(bytes),
-          key.cast("long")))
-      }
+      if (isEmpty) big.where(lit(false)) else big.where(contains(big, key))
+
+    def filterNot(big: DataFrame, key: Column): DataFrame =
+      if (isEmpty) big
+      else big.where(key.cast("long").isNull || !contains(big, key))
+
+    private def contains(big: DataFrame, key: Column): Column = {
+      GraftFunctions.register(big.sparkSession)
+      call_function("bitmap_contains", lit(bytes), key.cast("long"))
+    }
 
     /** One row per id, read out of the bitmap chunk by chunk. */
     def ids(spark: SparkSession): DataFrame = {
@@ -83,6 +92,10 @@ object BitmapSemi {
     def filter(big: DataFrame, key: Column): DataFrame =
       big.join(df.select(col("id").as("__bs_id")).distinct(),
         key.cast("long") === col("__bs_id"), "left_semi")
+
+    def filterNot(big: DataFrame, key: Column): DataFrame =
+      big.join(df.select(col("id").as("__bs_id")).distinct(),
+        key.cast("long") === col("__bs_id"), "left_anti")
 
     def ids(spark: SparkSession): DataFrame = df.distinct()
   }

@@ -1,184 +1,70 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.ops.BitmapSemi.{Frame, IdSet}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
-/** Distributed transitive-closure fixpoint.
+/** Transitive-closure fixpoint over id sets (J5).
   *
-  * Re-expresses the reference's relation_relation closure loop
-  * (`src/extract.cpp:211-237`: repeatedly look up parents of
-  * newly-discovered relations until the novelty count hits zero) as an
-  * iterative DataFrame loop:
+  * The reference's relation_relation loop (`src/extract.cpp:211-237`)
+  * keeps the relations in a Roaring bitmap and repeatedly looks up the
+  * parents of the ones found last round, keeping those not seen yet,
+  * until a round finds none. This is the same semi-naive loop over
+  * [[BitmapSemi.IdSet]]s:
   *
-  *   frontier_0 = seeds
-  *   frontier_{i+1} = (frontier_i join edges on child).parents EXCEPT visited
-  *   visited = union of all frontiers; stop when frontier empty
+  *   next    = parents of (edges whose child is in frontier) not in visited
+  *   visited = visited ∪ next; stop when next is empty
   *
-  * Scale notes (100 TB design): the visited/frontier sets are DataFrames,
-  * never collected to the driver; each round is localCheckpoint()ed to
-  * truncate lineage (otherwise the plan doubles per iteration); the only
-  * driver-side value is the per-round novelty count — exactly the scalar
-  * the reference also tracks. OSM relation nesting is shallow (<= ~5
-  * levels), so the loop is short in practice; maxIters is a safety bound.
+  * A round is one scan of the edges, filtered map-side by the frontier
+  * and visited bitmaps, aggregated into the next bitmap in one Spark
+  * job ([[BitmapSemi.idSets]]); emptiness is known on the driver. The
+  * bitmap cap `maxBytes` is the one size rule: a set over it is a
+  * [[BitmapSemi.Frame]] and runs the same loop through `left_semi` and
+  * `left_anti` joins; each round then pins the new frontier and the
+  * visited set with a `localCheckpoint` (lineage would otherwise grow
+  * per round) and asks the frontier once whether it is empty. OSM
+  * relation nesting is shallow, so [[MaxIters]] is only a safety bound.
   */
 object Closure {
 
-  /** All ids reachable from `seeds` by repeatedly following
-    * child -> parent edges. Output column: `id` (LONG), distinct.
-    * Seeds are included in the result (matches the reference: the initial
-    * relation set stays in the bitmap, `src/extract.cpp:219-224`).
-    *
-    * ADAPTIVE: when the edge set is small (<= `driverEdgeLimit` rows —
-    * relation_relation is ~7M rows even planet-scale, and seeds of a
-    * relation closure are bounded by the relation count), the closure
-    * runs DRIVER-SIDE over collected edges and seeds, exactly like the
-    * reference's in-memory bitmap loop (`src/extract.cpp:211-237`) —
-    * zero per-round job overhead. The default limit is the memory- AND
-    * time-honest [[DriverBudget.edgeCollectLimit]] (the round-8 q57
-    * lesson: fitting in 5% of heap does not make a multi-million-row
-    * collect fast), and it gates the SEED cardinality too — a small
-    * edge table with a huge seed set takes the distributed loop.
-    * `driverEdgeLimit = 0` forces the distributed loop outright.
-    */
-  def reachable(seeds: DataFrame, edges: DataFrame,
+  /** Safety bound on the number of rounds. */
+  val MaxIters: Int = 50
+
+  /** Every id reachable from `seeds` by following child -> parent edges
+    * of `edges`, the seeds included (the reference keeps the initial
+    * relations in its bitmap, `src/extract.cpp:219-224`). A null child
+    * or parent is not an id: such an edge is never followed. */
+  def reachable(seeds: IdSet, edges: DataFrame,
                 childCol: String, parentCol: String,
-                maxIters: Int = 50,
-                driverEdgeLimit: Long = DriverBudget.edgeCollectLimit())
-  : DataFrame = {
-    val spark = seeds.sparkSession
+                maxBytes: Int = BitmapSemi.MaxBytes): IdSet = {
     val e = edges.select(col(childCol).cast("long").as("child"),
       col(parentCol).cast("long").as("parent"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // persisted: the budget gate counts it and the chosen branch then
-    // reuses it (collect or eager checkpoint) — without the persist
-    // the distinct shuffle would run twice, and exactly in the
-    // huge-seed case the gate exists for
-    val seedsDf = seeds
-      .select(col(seeds.columns.head).cast("long").as("id")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // BOTH collected sets must fit the budget: planet-shape inputs can
-    // pair a small edge table (relation_relation ≈ 497K) with a seed
-    // set of millions (every relation in a large extract) — gating
-    // edges alone would collect the seeds ungated. Bounded take()
-    // probes decide the branch AND carry the driver branch's data
-    // (Components' pattern): at most limit+1 rows per side, no
-    // separate count jobs, no over-budget materialization.
-    val lim = math.min(driverEdgeLimit, Int.MaxValue - 2L).toInt
-    val takenE = e.take(lim + 1)
-    val takenS =
-      if (takenE.length <= driverEdgeLimit) seedsDf.take(lim + 1)
-      else Array.empty[org.apache.spark.sql.Row]
-    if (takenE.length <= driverEdgeLimit &&
-        takenS.length <= driverEdgeLimit) {
-      // reference-style driver closure (`src/extract.cpp:211-237`),
-      // ALL-PRIMITIVE (r16, r15 advisor): the old branch grouped boxed
-      // Rows into a Map[Long, Array[Long]] and walked a LinkedHashSet —
-      // exactly the multi-million-row boxed pattern the old 500K cap
-      // existed to avoid, now that the shared cap admits 8M rows. Ids
-      // map to dense ints via one sorted long array + binary search
-      // (Components' r7 rework), edges into a CSR adjacency, and the
-      // BFS runs over int arrays + a boolean visited[]. Result SET is
-      // identical (ClosureSpec pins driver == distributed).
-      val n = takenE.length
-      val ec = new Array[Long](n); val ep = new Array[Long](n)
-      var i = 0
-      while (i < n) {
-        val r = takenE(i); ec(i) = r.getLong(0); ep(i) = r.getLong(1)
-        i += 1
-      }
-      e.unpersist(blocking = false)
-      val seedIds = takenS.map(_.getLong(0))
-      seedsDf.unpersist(blocking = false)
-      // dense id space: sorted distinct over children ∪ parents ∪ seeds
-      val all = new Array[Long](2 * n + seedIds.length)
-      System.arraycopy(ec, 0, all, 0, n)
-      System.arraycopy(ep, 0, all, n, n)
-      System.arraycopy(seedIds, 0, all, 2 * n, seedIds.length)
-      java.util.Arrays.sort(all)
-      var m = 0
-      i = 0
-      while (i < all.length) {
-        if (m == 0 || all(i) != all(m - 1)) { all(m) = all(i); m += 1 }
-        i += 1
-      }
-      val ids = java.util.Arrays.copyOf(all, m)
-      def dense(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
-      // CSR adjacency: per-child degree, prefix-sum offsets, place
-      val deg = new Array[Int](m)
-      i = 0
-      while (i < n) { deg(dense(ec(i))) += 1; i += 1 }
-      val off = new Array[Int](m + 1)
-      i = 0
-      while (i < m) { off(i + 1) = off(i) + deg(i); i += 1 }
-      val adj = new Array[Int](n)
-      val fill = new Array[Int](m)
-      i = 0
-      while (i < n) {
-        val c = dense(ec(i))
-        adj(off(c) + fill(c)) = dense(ep(i))
-        fill(c) += 1
-        i += 1
-      }
-      val visited = new Array[Boolean](m)
-      var frontier = new Array[Int](m)
-      var next = new Array[Int](m)
-      var fLen = 0
-      i = 0
-      while (i < seedIds.length) {
-        val s0 = dense(seedIds(i))
-        if (!visited(s0)) {
-          visited(s0) = true; frontier(fLen) = s0; fLen += 1
-        }
-        i += 1
-      }
-      var iter = 0
-      while (fLen > 0 && iter < maxIters) {
-        var nLen = 0
-        i = 0
-        while (i < fLen) {
-          val c = frontier(i)
-          var j = off(c)
-          val end = off(c + 1)
-          while (j < end) {
-            val p = adj(j)
-            if (!visited(p)) {
-              visited(p) = true; next(nLen) = p; nLen += 1
-            }
-            j += 1
-          }
-          i += 1
-        }
-        val tmp = frontier; frontier = next; next = tmp
-        fLen = nLen
-        iter += 1
-      }
-      val out = new Array[Long](m)
-      var k = 0
-      i = 0
-      while (i < m) { if (visited(i)) { out(k) = ids(i); k += 1 }; i += 1 }
-      import spark.implicits._
-      return java.util.Arrays.copyOf(out, k).toSeq.toDF("id")
-    }
-    var visited = seedsDf.localCheckpoint(eager = true)
-    seedsDf.unpersist(blocking = false) // checkpoint is materialized
-    var frontier = visited
+    var visited = seeds
+    var frontier = seeds
     var iter = 0
-    var novelty = frontier.count()
-    while (novelty > 0 && iter < maxIters) {
-      val next = frontier.join(e, frontier("id") === e("child"))
-        .select(e("parent").as("id")).distinct()
-        .join(visited, Seq("id"), "left_anti")
-        .localCheckpoint(eager = true)
-      novelty = next.count()
-      if (novelty > 0) {
-        visited = visited.union(next).localCheckpoint(eager = true)
-        frontier = next
+    while (!frontier.isEmpty && iter < MaxIters) {
+      val Seq(found) = BitmapSemi.idSets(
+        visited.filterNot(frontier.filter(e, col("child")), col("parent")),
+        Seq(col("parent")), maxBytes)
+      frontier = checkpointed(found) match {
+        case Frame(df) if df.isEmpty => BitmapSemi.empty
+        case s => s
       }
+      if (!frontier.isEmpty)
+        visited = checkpointed(BitmapSemi.union(edges.sparkSession,
+          visited, frontier, maxBytes))
       iter += 1
     }
     e.unpersist(blocking = false)
     visited
+  }
+
+  /** A [[Frame]] materialized, so later rounds do not recompute it; a
+    * bitmap as it is. */
+  private def checkpointed(s: IdSet): IdSet = s match {
+    case Frame(df) => Frame(df.localCheckpoint(eager = true))
+    case bitmap => bitmap
   }
 }

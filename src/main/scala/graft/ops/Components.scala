@@ -25,8 +25,8 @@ import org.apache.spark.storage.StorageLevel
   *   - the edge set is never collected above `driverEdgeLimit`; below
   *     it, a driver-side union-find runs instead (dedup graphs are
   *     sparse — pairs surviving jaccard-verify are a tiny fraction of
-  *     the corpus — so this mirrors [[Closure.reachable]]'s adaptive
-  *     design, and the distributed path stays the contract at scale);
+  *     the corpus — and the distributed path stays the contract at
+  *     scale);
   *   - every round is localCheckpoint()ed: lineage would otherwise
   *     double per iteration and re-execute the whole LSH pipeline each
   *     round;
@@ -67,9 +67,8 @@ object Components {
     val taken = eAll.take(
       math.min(driverEdgeLimit, Int.MaxValue - 1L).toInt + 1)
     if (taken.length <= driverEdgeLimit) {
-      // driver union-find (path-halving); same adaptive pattern as
-      // Closure.reachable — the collected set is the VERIFIED pair
-      // list, already a tiny fraction of the corpus. All-primitive:
+      // driver union-find (path-halving); the collected set is the
+      // VERIFIED pair list, already a tiny fraction of the corpus. All-primitive:
       // node ids are mapped to dense ints via one sorted long array +
       // binary search, and union-find runs over an Array[Int] — no
       // boxed HashMap (the round-7 33.7s q57 was the boxed version at

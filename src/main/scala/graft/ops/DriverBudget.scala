@@ -1,8 +1,8 @@
 package graft.ops
 
-/** Byte-budget for the adaptive driver-side paths ([[Closure]],
-  * [[Components]]): how many collected edge rows fit in a small,
-  * fixed fraction of the driver heap.
+/** Byte-budget for the adaptive driver-side path of [[Components]]:
+  * how many collected edge rows fit in a small, fixed fraction of the
+  * driver heap.
   *
   * The old guard was a flat 4M-row limit — right order of magnitude at
   * planet cardinalities (relation_relation ≈ 497K) but blind to the
@@ -23,7 +23,7 @@ object DriverBudget {
     * GC pressure would cost more than the distributed loop saves. */
   val HeapFraction: Double = 0.05
 
-  /** Max edge rows the adaptive paths may collect on THIS driver
+  /** Max edge rows the adaptive path may collect on THIS driver
     * (5% of max heap at 128 B/row: 16 GiB -> ~6.7M rows, 2 GiB ->
     * ~840K). Deterministic per JVM; pass an explicit limit (or 0 to
     * force the distributed loop) where tests need to pin the branch. */

@@ -19,9 +19,10 @@ import org.apache.spark.sql.functions._
   * bitmaps live on the driver up to [[BitmapSemi.MaxBytes]] (32 MiB,
   * ~270M dense ids); a set over that cap stays a distributed id frame
   * and the stages reading it fall back to `left_semi` joins. The
-  * relation closure runs through [[Closure]]. Output ordering is one
-  * sort at the very end, matching the reference's
-  * nodes-then-ways-then-relations ascending-id stream.
+  * relation closure ([[Closure]]) is the reference's loop over these
+  * sets, one scan per round. Output ordering is one sort at the very
+  * end, matching the reference's nodes-then-ways-then-relations
+  * ascending-id stream.
   */
 object Extract {
 
@@ -65,11 +66,8 @@ object Extract {
       col("parent_id"))
 
     // J5: transitive closure over relation_relation (`:211-237`)
-    val Seq(relations) = sets(
-      if (relSeeds.isEmpty) None
-      else Some(Closure.reachable(relSeeds.ids(spark), t.relationRelation,
-        childCol = "member_id", parentCol = "parent_id")),
-      col("id"))
+    val relations = Closure.reachable(relSeeds, t.relationRelation,
+      childCol = "member_id", parentCol = "parent_id", maxBytes)
 
     // J6: multipolygon completion — way members OF SELECTED relations
     // tagged type=multipolygon (`:243-260`); J7 keeps only the ones that

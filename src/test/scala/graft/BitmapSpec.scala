@@ -86,4 +86,26 @@ class BitmapSpec extends AnyFunSuite with TestSession {
     assert(fallbackPlan.toLowerCase.contains("join"))
     assert(!fallbackPlan.contains("bitmap_contains"))
   }
+
+  test("filterNot: Bitmap, Frame and a plain left_anti keep the same " +
+    "rows, null keys included; the empty set keeps every row") {
+    import graft.ops.BitmapSemi
+    val big = Seq[(java.lang.Long, Int)]((1L, 0), (2L, 1), (3L, 2),
+      (null, 3), (5L, 4), (2L, 5), (null, 6), (100000L, 7), (-1L, 8))
+      .toDF("k", "v")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    for (ids <- Seq(Seq(2L, 5L, 100000L, -1L), Seq(42L), Seq.empty[Long])) {
+      val idsDf = ids.toDF("id")
+      val want = rows(big.join(idsDf, $"k" === $"id", "left_anti"))
+      assert(want.count(_.startsWith("[null,")) == 2, s"ids=$ids")
+      if (ids.isEmpty) assert(want == rows(big))
+      val bitmap = BitmapSemi.idSets(idsDf, Seq($"id")).head
+      assert(bitmap.isInstanceOf[BitmapSemi.Bitmap], s"ids=$ids")
+      assert(bitmap.isEmpty == ids.isEmpty, s"ids=$ids")
+      assert(rows(bitmap.filterNot(big, $"k")) == want, s"bitmap ids=$ids")
+      assert(rows(BitmapSemi.Frame(idsDf).filterNot(big, $"k")) == want,
+        s"frame ids=$ids")
+    }
+  }
 }

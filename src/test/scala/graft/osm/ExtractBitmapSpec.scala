@@ -10,8 +10,8 @@ import java.nio.file.Files
 
 /** The extract over id bitmaps ([[Extract.complete]], [[Extract.rows]])
   * against the join formulation it replaced, kept here verbatim as the
-  * reference (as `ClosureSpec` pins the driver closure against the
-  * distributed one): the same node, way and relation sets, the same
+  * reference (its closure is the join loop: [[Closure]] over a
+  * frame, cap 0): the same node, way and relation sets, the same
   * rows written by [[Ingest.writeExtract]] and the same
   * [[Extract.materialize]] output — with bitmaps, and with the bitmap
   * cap forced to 0 so every set takes the `left_semi` fallback. Plus
@@ -41,8 +41,9 @@ class ExtractBitmapSpec extends AnyFunSuite with graft.TestSession {
         .join(t.wayRelation, wayIds0("id") === t.wayRelation("member_id"))
         .select(col("parent_id").as("id"))
       val relSeeds = relFromNodes.union(relFromWays).distinct()
-      val relationIds = Closure.reachable(relSeeds, t.relationRelation,
-        childCol = "member_id", parentCol = "parent_id")
+      val relationIds = Closure.reachable(BitmapSemi.Frame(relSeeds),
+        t.relationRelation, childCol = "member_id", parentCol = "parent_id",
+        maxBytes = 0).ids(seeds.sparkSession)
       val mpWayRefs = t.relations
         .join(relationIds, t.relations("id") === relationIds("id"),
           "left_semi")

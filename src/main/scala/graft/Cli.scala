@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The four-verb command face of the engine, mirroring the reference's
@@ -234,9 +234,16 @@ object Cli {
         case _ => lit(null)
           .cast("array<struct<ref:bigint,mtype:string,role:string>>")
       }).as("members"),
-      col("tags"), metaCol, lit(seqnum).as("seqnum"))
+      col("tags"), metaCol, diffSeqnum(seqnum).as("seqnum"))
     base
   }
+
+  /** The diff's seqnum as a column: a zero-argument function, which
+    * generated code holds by reference. A literal is inlined into it,
+    * and so is a deterministic function, which the optimizer folds to
+    * one; either way each diff would compile its own parse stage. */
+  private def diffSeqnum(seqnum: Long): Column =
+    udf(() => seqnum).asNondeterministic().apply()
 
   private def cmdUpdate(spark: SparkSession, a: IndexedSeq[String]): Unit = {
     val (flags, pos) = a.partition(_.startsWith("--"))

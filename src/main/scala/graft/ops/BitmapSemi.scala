@@ -2,7 +2,8 @@ package graft.ops
 
 import graft.functions.{GraftFunctions, IdBitmapImpl, IdBitmapProbe}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{call_function, col, lit}
+import org.apache.spark.sql.functions.{call_function, col, explode, lit}
+import org.apache.spark.sql.types.ArrayType
 
 /** Broadcast-bitmap semi-join: the Spark rendering of the reference's
   * Roaring-bitmap ID-set filters (`src/extract.cpp:149-151` — every
@@ -73,6 +74,10 @@ object BitmapSemi {
       call_function("bitmap_contains", lit(bytes), key.cast("long"))
     }
 
+    /** The ids, ascending, read on the driver. */
+    def iterator: Iterator[Long] =
+      Iterator.range(0, probe.chunks).flatMap(probe.chunkIds(_))
+
     /** One row per id, read out of the bitmap chunk by chunk. */
     def ids(spark: SparkSession): DataFrame = {
       import spark.implicits._
@@ -103,6 +108,13 @@ object BitmapSemi {
   private val emptyBytes = new IdBitmapImpl.Buffer().serialize
   val empty: IdSet = Bitmap(emptyBytes)
 
+  /** The bitmap of `ids`, built on the driver. */
+  def bitmapOf(ids: Iterator[Long]): Bitmap = {
+    val b = new IdBitmapImpl.Buffer
+    ids.foreach(b.add)
+    Bitmap(b.serialize)
+  }
+
   /** `a ∪ b`: merged on the driver when both are bitmaps and the union
     * fits `maxBytes`, else the union of their id frames. */
   def union(spark: SparkSession, a: IdSet, b: IdSet,
@@ -116,14 +128,15 @@ object BitmapSemi {
     case _ => Frame(a.ids(spark).union(b.ids(spark)))
   }
 
-  /** The id sets of `cols` (BIGINT-castable; nulls ignored) over the
-    * rows of `src`, all from ONE scan in ONE Spark job: each partition
-    * builds its partial bitmaps and a tree reduce merges them (a SQL
-    * `bitmap_agg` would cost two jobs under adaptive execution — its
-    * single-row shuffle runs as a job of its own). Each set is a
-    * [[Bitmap]] if it fits `maxBytes`, else a [[Frame]] over `src`; a
-    * partial over the cap is dropped where it is built, so no
-    * oversized bitmap is shipped. */
+  /** The id sets of `cols` over the rows of `src`, all from ONE scan in
+    * ONE Spark job: each partition builds its partial bitmaps and a
+    * tree reduce merges them (a SQL `bitmap_agg` would cost two jobs
+    * under adaptive execution — its single-row shuffle runs as a job of
+    * its own). A column is BIGINT-castable, or an array of such, whose
+    * elements each count; nulls are ignored. Each set is a [[Bitmap]]
+    * if it fits `maxBytes`, else a [[Frame]] over `src`; a partial over
+    * the cap is dropped where it is built, so no oversized bitmap is
+    * shipped. */
   def idSets(src: DataFrame, cols: Seq[Column],
              maxBytes: Int = MaxBytes): Seq[IdSet] = {
     val k = cols.size
@@ -137,14 +150,27 @@ object BitmapSemi {
         })
     val zero = Array.fill(k)(if (emptyBytes.length <= cap) emptyBytes
       else null)
-    val merged = src.select(cols.map(_.cast("long")): _*)
+    val named = src.select(cols.zipWithIndex.map { case (c, i) =>
+      c.as(s"_c$i") }: _*)
+    val isArray = named.schema.fields.map(_.dataType.isInstanceOf[ArrayType])
+    def ids(i: Int): Column =
+      col(s"_c$i").cast(if (isArray(i)) "array<bigint>" else "bigint")
+    val merged = named.select(cols.indices.map(ids): _*)
       .queryExecution.toRdd
       .mapPartitions { rows =>
         val bufs = Array.fill(k)(new IdBitmapImpl.Buffer)
         rows.foreach { r =>
           var i = 0
           while (i < k) {
-            if (!r.isNullAt(i)) bufs(i).add(r.getLong(i))
+            if (r.isNullAt(i)) ()
+            else if (isArray(i)) {
+              val a = r.getArray(i)
+              var j = 0
+              while (j < a.numElements) {
+                if (!a.isNullAt(j)) bufs(i).add(a.getLong(j))
+                j += 1
+              }
+            } else bufs(i).add(r.getLong(i))
             i += 1
           }
         }
@@ -155,9 +181,9 @@ object BitmapSemi {
       }
       .treeAggregate(zero)(merge, merge)
     cols.indices.map { i =>
-      if (merged(i) == null)
-        Frame(src.select(cols(i).cast("long").as("id"))
-          .where(col("id").isNotNull))
+      if (merged(i) == null) Frame(named.select(
+        (if (isArray(i)) explode(ids(i)) else ids(i)).as("id"))
+        .where(col("id").isNotNull))
       else Bitmap(merged(i))
     }
   }

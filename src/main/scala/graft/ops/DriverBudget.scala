@@ -1,8 +1,13 @@
 package graft.ops
 
-/** Byte-budget for the adaptive driver-side path of [[Components]]:
-  * how many collected edge rows fit in a small, fixed fraction of the
-  * driver heap.
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+
+/** Budgets for collecting to the driver: how many edge rows the
+  * adaptive driver-side path of [[Components]] may collect, a small,
+  * fixed fraction of the driver heap, and [[collectUnder]]'s byte cap
+  * on a collect that falls back to a distributed path.
   *
   * The old guard was a flat 4M-row limit — right order of magnitude at
   * planet cardinalities (relation_relation ≈ 497K) but blind to the
@@ -46,4 +51,39 @@ object DriverBudget {
 
   /** Effective driver-collect limit: memory-honest AND time-honest. */
   def edgeCollectLimit(): Long = math.min(edgeRowBudget(), EdgeRowTimeCap)
+
+  /** `df`'s rows on the driver, from one Spark job, when their binary
+    * (UnsafeRow) size totals at most `maxBytes`; None otherwise. Each of
+    * the frame's partitions gets an even share of the cap and ships
+    * nothing once it passes its share, so at most `maxBytes` ever
+    * reaches the driver, whatever the partition count: a frame over the
+    * cap, or one whose rows crowd into one partition, costs the job but
+    * not the driver's memory before the caller falls back to its
+    * distributed path. An empty frame always fits. */
+  def collectUnder(df: DataFrame, maxBytes: Long): Option[Array[Row]] = {
+    val schema = df.schema
+    val rdd = df.queryExecution.toRdd
+    val share = maxBytes / math.max(1, rdd.getNumPartitions)
+    val parts = rdd.mapPartitions { rows =>
+      lazy val toUnsafe = UnsafeProjection.create(schema)
+      val out = Array.newBuilder[UnsafeRow]
+      var bytes = 0L
+      while (rows.hasNext && bytes <= share) {
+        val r = (rows.next() match {
+          case u: UnsafeRow => u
+          case other => toUnsafe(other)
+        }).copy()
+        bytes += r.getSizeInBytes
+        out += r
+      }
+      Iterator.single(if (bytes <= share && !rows.hasNext) out.result()
+        else null)
+    }.collect()
+    if (parts.contains(null)) None
+    else {
+      val toRow = ExpressionEncoder(schema).resolveAndBind()
+        .createDeserializer()
+      Some(parts.flatMap(_.map(toRow)))
+    }
+  }
 }

@@ -58,7 +58,9 @@ object OsmLayout {
   /** Reverse adjacency: one `(member_id, parent_id)` row per distinct
     * member of a `parent` element, deduped like the reference's DUPSORT
     * indexes. `mtype` selects relation members of one type; `None`
-    * takes a way's node list. */
+    * takes a way's node list. An element has one row, so the dedup is
+    * per parent row, inside the row: deriving the rows needs no
+    * shuffle. */
   final case class Adjacency(name: String, parent: Element,
                              mtype: Option[String]) extends Table {
     def etype: String = parent.etype
@@ -75,8 +77,17 @@ object OsmLayout {
         .select(col("m.ref").as("member_id"), col("parent_id"))
     }
 
+    /** A parent row's member ids, as an array with duplicates kept: the
+      * `member_id`s of its [[refs]], without exploding the row. */
+    def memberIds: Column = mtype match {
+      case None => col("nodes")
+      case Some(t) =>
+        transform(filter(col("members"), _("mtype") === t), _("ref"))
+    }
+
     def rows(parents: DataFrame, want: String => Boolean): DataFrame =
-      refs(parents).distinct()
+      parents.select(explode(array_distinct(memberIds)).as("member_id"),
+        col("id").as("parent_id"))
   }
 
   /** Every node's coordinates, with the level-16 `s2cell` index column

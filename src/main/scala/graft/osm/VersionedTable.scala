@@ -2,6 +2,7 @@ package graft.osm
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
+import graft.ops.BitmapSemi
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
@@ -114,6 +115,11 @@ object VersionedTable {
     java.util.concurrent.ExecutorService => Boolean =
     _.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
 
+  /** Test seam: runs on the thread of each [[commitDelta]] table write,
+    * with the table's name, before the write starts — lets a spec fail
+    * one table's write in the middle of a commit. */
+  private[osm] var tableWriteHook: String => Unit = _ => ()
+
   /** Bucketed-table layout: `nBuckets` hash buckets on column `key`;
     * `versions(b)` = the version whose directory holds bucket b.
     * `schema` is the table's DDL, recorded at commit time so a table
@@ -166,11 +172,25 @@ object VersionedTable {
     * lookup read a single bucket directory instead of the table
     * (asserted in lockstep by ManifestSpec). */
   def bucketOfValue(key: Long, nBuckets: Int): Int = {
-    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
-    val h = XxHash64(Seq(Literal(key)), 42L) // 42 = xxhash64's SQL seed
-      .eval(null).asInstanceOf[Long]
+    // the hash XxHash64 evaluates for one BIGINT child; 42 is xxhash64's
+    // SQL seed
+    val h = org.apache.spark.sql.catalyst.expressions.XXH64
+      .hashLong(key, 42L)
     val m = h % nBuckets
     (if (m < 0) m + nBuckets else m).toInt
+  }
+
+  /** Buckets (sorted) that the ids of `ids` hash into: driver arithmetic
+    * over a bitmap, which stops once every bucket is seen; one
+    * [[bucketsOf]] aggregate over a frame. */
+  def bucketsOf(ids: BitmapSemi.IdSet, nBuckets: Int): Seq[Int] = ids match {
+    case b: BitmapSemi.Bitmap =>
+      val seen = new java.util.BitSet(nBuckets)
+      val it = b.iterator
+      while (it.hasNext && seen.cardinality < nBuckets)
+        seen.set(bucketOfValue(it.next(), nBuckets))
+      seen.stream().toArray.toSeq
+    case BitmapSemi.Frame(df) => bucketsOf(df, "id", nBuckets)
   }
 
   private def versionManifestPath(root: String, v: Long) =
@@ -810,13 +830,18 @@ object VersionedTable {
       parallelTableWrites(root, next, spark.sparkContext, resolved) {
         case (name, spec, changed, out) =>
         out.foreach { df =>
+          tableWriteHook(name)
           // guard: keep only rows that truly hash into the changed set,
-          // so a buggy transform cannot leak rows into linked buckets
+          // so a buggy transform cannot leak rows into linked buckets.
+          // The set goes in as a bitmap literal, which generated code
+          // holds by reference, and the write is always as wide as the
+          // layout: neither depends on which buckets changed, so the
+          // classes compiled for one commit serve the next
           writeBuckets(
-            df.withColumn("__bucket", bucketExpr(spec.key, spec.nBuckets))
-              .where(col("__bucket")
-                .isin(changed.map(Integer.valueOf): _*)),
-            spec.key, changed.size, pageRowLimit, s"$root/v=$next/$name")
+            BitmapSemi.bitmapOf(changed.iterator.map(_.toLong)).filter(
+              df.withColumn("__bucket", bucketExpr(spec.key, spec.nBuckets)),
+              col("__bucket")),
+            spec.key, spec.nBuckets, pageRowLimit, s"$root/v=$next/$name")
         }
       }
       val newBuckets = resolved.map { case (name, spec, changed, _) =>

@@ -1,11 +1,15 @@
 package graft.streaming
 
+import graft.ops.{BitmapSemi, DriverBudget}
+import graft.ops.BitmapSemi.IdSet
 import graft.osm.{Changeset, OsmLayout, VersionedTable}
 import graft.osm.VersionedTable.Delta
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{MapType, StructType}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+
+import scala.jdk.CollectionConverters._
 
 /** Replication surface: seqnum <-> URL/timestamp utilities (F7/F8,
   * `utils/server.py:27-172`) and the continuous catch-up loop (U5,
@@ -140,41 +144,10 @@ object Replication {
       }
       .start()
 
-  /** Apply one change micro-batch as a single copy-on-write commit.
-    * Every table of the store that [[OsmLayout]] describes gets one
-    * [[Changeset.delta]]; tables absent from the store's manifest are
-    * skipped, so a node-only store and the full 8-table store both
-    * work. The buckets each delta rewrites come from two aggregates:
-    * one over the deduplicated batch (changed element ids, the changed
-    * parents' new members, max seqnum), one over the changed parents'
-    * old rows, read bucket-pruned (their old members) — two driver
-    * actions before [[VersionedTable.commitDelta]]. A batch whose
-    * every seqnum is null fails before anything is claimed.
-    * `dryRun` computes every delta but rolls back instead of
-    * publishing (the reference's default update mode,
-    * `src/update.cpp:280-291`); `extraMeta` adds CLI-supplied keys
-    * (e.g. the replication timestamp) to the committed manifest.
-    * Returns [[ApplyResult.Applied]] when the batch was applied (or
-    * dry-run-computed), [[ApplyResult.EmptyDiff]] for a zero-row
-    * change set, [[ApplyResult.ReplayedBatch]] when the store's last
-    * applied batch id already equals `batchId` (at-least-once replay
-    * guard). Callers decide the response: the CLI records metadata and
-    * exits 0 on an empty diff but fails loudly on a replay; the
-    * streaming loop logs both. */
-  def applyBatch(spark: SparkSession, root: String, batch: DataFrame,
-                 batchId: Long, dryRun: Boolean = false,
-                 extraMeta: Map[String, String] = Map.empty): ApplyResult = {
-    val prev = VersionedTable.current(root).getOrElse(
-      throw new IllegalStateException(s"no committed version at $root"))
-    // replay guard BEFORE the emptiness probe: a redelivered batch id
-    // must report ReplayedBatch even when its diff is empty (otherwise
-    // the CLI's EmptyDiff path would re-record an already-applied
-    // seqnum), and the manifest read is cheaper than the aggregate
-    // that finds an empty batch
-    if (prev.meta.get(BatchIdKey).contains(batchId.toString))
-      return ApplyResult.ReplayedBatch
-    val bk = prev.buckets
-    // Latest-version-wins dedup (A8) BEFORE applying: AvailableNow
+  /** `batch` with one change per element, its latest: the
+    * deduplication [[applyBatch]] applies first. */
+  private[graft] def latest(batch: DataFrame): DataFrame = {
+    // Latest-version-wins dedup (A8), BEFORE applying: AvailableNow
     // coalesces many diff files into one micro-batch (up to 1000), so
     // one element can legitimately appear at several seqnums (created
     // then modified across minutely diffs). The reference applies rows
@@ -210,12 +183,82 @@ object Replication {
         coalesce(col("meta.timestamp"), lit(0L)).desc,
         col("visible").asc_nulls_last,
         contentHash.desc)
-    val changes = batch
+    batch
       .withColumn("_rk", row_number().over(w))
       .where(col("_rk") === 1).drop("_rk")
-      .persist()
+  }
+
+  /** Apply one change micro-batch as a single copy-on-write commit.
+    * Every table of the store that [[OsmLayout]] describes gets one
+    * [[Changeset.delta]]; tables absent from the store's manifest are
+    * skipped, so a node-only store and the full 8-table store both
+    * work.
+    *
+    * The deduplicated batch ([[latest]]) is the change set. When its
+    * rows fit `maxBytes`, each partition within an even share of it
+    * ([[DriverBudget.collectUnder]], so no more than the cap is ever
+    * collected), it is held on the driver, collected by one job pair:
+    * its emptiness, max(seqnum) and bucket sets are arithmetic over the
+    * rows, each element type's changed ids become a bitmap and its
+    * visible upserts a local relation. A batch over the cap stays a
+    * persisted frame, and its id sets are taken from it by one scan
+    * ([[BitmapSemi.idSets]], frames where a set itself exceeds the
+    * cap). Either way the same code follows: the changed parents' old
+    * rows are read bucket-pruned and filtered by their ids (the
+    * reference's reverse lookup, `update.cpp:78-126`), and with the
+    * new members they key the adjacency deltas, one id-set job per
+    * parent table; then [[VersionedTable.commitDelta]] rewrites each
+    * table's changed buckets. No plan depends on the diff beyond the
+    * by-reference bitmap literals, so the classes compiled for one
+    * diff serve the next. A batch whose every seqnum is null fails
+    * before anything is claimed.
+    *
+    * `dryRun` computes every delta but rolls back instead of
+    * publishing (the reference's default update mode,
+    * `src/update.cpp:280-291`); `extraMeta` adds CLI-supplied keys
+    * (e.g. the replication timestamp) to the committed manifest.
+    * Returns [[ApplyResult.Applied]] when the batch was applied (or
+    * dry-run-computed), [[ApplyResult.EmptyDiff]] for a zero-row
+    * change set, [[ApplyResult.ReplayedBatch]] when the store's last
+    * applied batch id already equals `batchId` (at-least-once replay
+    * guard). Callers decide the response: the CLI records metadata and
+    * exits 0 on an empty diff but fails loudly on a replay; the
+    * streaming loop logs both. */
+  def applyBatch(spark: SparkSession, root: String, batch: DataFrame,
+                 batchId: Long, dryRun: Boolean = false,
+                 extraMeta: Map[String, String] = Map.empty,
+                 maxBytes: Int = BitmapSemi.MaxBytes): ApplyResult = {
+    val prev = VersionedTable.current(root).getOrElse(
+      throw new IllegalStateException(s"no committed version at $root"))
+    // replay guard BEFORE the emptiness probe: a redelivered batch id
+    // must report ReplayedBatch even when its diff is empty (otherwise
+    // the CLI's EmptyDiff path would re-record an already-applied
+    // seqnum), and the manifest read is cheaper than the job that
+    // finds an empty batch
+    if (prev.meta.get(BatchIdKey).contains(batchId.toString))
+      return ApplyResult.ReplayedBatch
+    val bk = prev.buckets
+    val changes = latest(batch)
+    val held = DriverBudget.collectUnder(changes, maxBytes)
+    // over the cap the batch stays distributed, persisted so the id
+    // sets, max(seqnum) and the deltas read one dedup
+    if (held.isEmpty) changes.persist()
     try {
-      def ofType(etype: String) = changes.where(col("etype") === etype)
+      val schema = changes.schema
+      val (idAt, etypeAt, visibleAt, seqAt) = (schema.fieldIndex("id"),
+        schema.fieldIndex("etype"), schema.fieldIndex("visible"),
+        schema.fieldIndex("seqnum"))
+      // a batch over the cap holds at least one row
+      val maxSeqnum: Option[Long] = held match {
+        case Some(rows) if rows.isEmpty =>
+          return ApplyResult.EmptyDiff(prev.version)
+        case Some(rows) => rows.iterator.filterNot(_.isNullAt(seqAt))
+          .map(_.getLong(seqAt)).maxOption
+        case None => Option(changes.agg(max(col("seqnum"))).head().get(0))
+          .map(_.asInstanceOf[Long])
+      }
+      require(bk.nonEmpty,
+        s"catch-up needs a bucketed store at $root (commitBucketed)")
       // the layout's tables this store holds; an adjacency table needs
       // its parent element table too, whose old rows name the members
       // it drops
@@ -224,73 +267,66 @@ object Replication {
           bk.contains(a.name) && bk.contains(a.parent.name)
         case t => bk.contains(t.name)
       }
-      // (table, bucket) of the bucket keys in `rows`
-      def keyBuckets(t: OsmLayout.Table, rows: DataFrame): DataFrame =
-        rows.select(lit(t.name).as("table"),
-          VersionedTable.bucketExpr(t.bucketKey, bk(t.name).nBuckets)
-            .as("bucket"),
-          lit(null).cast("bigint").as("seqnum"))
-      // ONE driver action for all `parts`: a row per table, holding its
-      // bucket set and max(seqnum)
-      def bucketSets(parts: Seq[DataFrame]): Map[String, Row] =
-        if (parts.isEmpty) Map.empty
-        else parts.reduce(_ unionByName _).groupBy(col("table"))
-          .agg(collect_set(col("bucket")), max(col("seqnum"))).collect()
-          .map(r => r.getString(0) -> r).toMap
-      def buckets(sets: Map[String, Row], table: String): Seq[Int] =
-        sets.get(table).fold(Seq.empty[Int])(_.getSeq[Int](1))
-
-      // Aggregate 1, over the batch: the changed element ids' buckets,
-      // the buckets of the changed parents' NEW members, and, under the
-      // table name "", max(seqnum) — whose row is missing iff the batch
-      // is empty
-      val sets = bucketSets(
-        changes.select(lit("").as("table"), lit(null).cast("int")
-          .as("bucket"), col("seqnum")) +:
-          tables.map {
-            case a: OsmLayout.Adjacency =>
-              keyBuckets(a, a.refs(ofType(a.etype).where(col("visible"))))
-            case t => keyBuckets(t, ofType(t.etype))
-          })
-      val batchRow = sets.get("") match {
-        case Some(r) => r
-        case None => return ApplyResult.EmptyDiff(prev.version)
-      }
-      require(bk.nonEmpty,
-        s"catch-up needs a bucketed store at $root (commitBucketed)")
       for (t <- tables) require(bk(t.name).key == t.bucketKey,
         s"${t.name} at $root is bucketed on ${bk(t.name).key}, but the " +
           s"OSM layout buckets it on ${t.bucketKey}")
-      if (batchRow.isNullAt(2)) throw new IllegalArgumentException(
+      val seqnum = maxSeqnum.getOrElse(throw new IllegalArgumentException(
         s"change batch $batchId for $root has no seqnum: every row's " +
           "seqnum is null, so it cannot advance the replication " +
-          "sequence number")
+          "sequence number"))
       // the locations upsert recomputes the s2cell index column
       graft.functions.GraftFunctions.register(spark)
 
-      // Aggregate 2, over the changed parents' OLD rows, read
-      // bucket-pruned from the pinned version (O(changes), the
-      // reference's per-way reverse lookup at `update.cpp:78-126`): the
-      // buckets of the old members an adjacency delta deletes
-      val oldParents = tables.collect { case a: OsmLayout.Adjacency =>
-        a.parent }.distinct.filter(p => buckets(sets, p.name).nonEmpty)
-        .map { p =>
-          p.name -> VersionedTable.readBuckets(spark, root, p.name,
-            buckets(sets, p.name), Some(prev))
-            .join(ofType(p.etype).select(col("id")), Seq("id"), "left_semi")
-        }.toMap
-      val oldSets = bucketSets(tables.collect {
-        case a: OsmLayout.Adjacency if oldParents.contains(a.parent.name) =>
-          keyBuckets(a, a.refs(oldParents(a.parent.name)))
-      })
+      // per element type: the ids it changes (a null id is none) and
+      // its visible upserts
+      val etypes = tables.map(_.etype).distinct
+      val (changed, upserts) = held match {
+        case Some(rows) =>
+          val of = rows.groupBy(_.getString(etypeAt)).withDefaultValue(
+            Array.empty[Row])
+          (etypes.map(e => e -> (BitmapSemi.bitmapOf(of(e).iterator
+            .filterNot(_.isNullAt(idAt)).map(_.getLong(idAt))): IdSet)).toMap,
+            etypes.map(e => e -> spark.createDataFrame(of(e).toSeq.filter(r =>
+              !r.isNullAt(visibleAt) && r.getBoolean(visibleAt)).asJava,
+              schema)).toMap)
+        case None =>
+          def ofType(e: String) = changes.where(col("etype") === e)
+          (etypes.zip(BitmapSemi.idSets(changes, etypes.map(e =>
+            when(col("etype") === e, col("id"))), maxBytes)).toMap,
+            etypes.map(e => e -> ofType(e).where(col("visible"))).toMap)
+      }
+      def bucketsOf(t: OsmLayout.Table, ids: IdSet): Seq[Int] =
+        VersionedTable.bucketsOf(ids, bk(t.name).nBuckets)
+
+      // each adjacency table's keys: the members of its changed
+      // parents, old and new. The old rows are read bucket-pruned from
+      // the pinned version (O(changes)); one id-set job per parent table
+      val members: Map[String, IdSet] = tables
+        .collect { case a: OsmLayout.Adjacency => a }.groupBy(_.parent)
+        .filter { case (p, _) => !changed(p.etype).isEmpty }
+        .flatMap { case (p, adjs) =>
+          val ids = changed(p.etype)
+          def memberIds(parents: DataFrame) = parents.select(
+            adjs.map(a => a.memberIds.as(a.name)): _*)
+          val parents = memberIds(ids.filter(VersionedTable.readBuckets(
+            spark, root, p.name, bucketsOf(p, ids), Some(prev)), col("id")))
+            .unionByName(memberIds(upserts(p.etype)))
+          adjs.map(_.name).zip(BitmapSemi.idSets(parents,
+            adjs.map(a => col(a.name)), maxBytes))
+        }
+      val keys: Map[String, IdSet] = tables.map {
+        case a: OsmLayout.Adjacency =>
+          a.name -> members.getOrElse(a.name, BitmapSemi.empty)
+        case t => t.name -> changed(t.etype)
+      }.toMap
 
       VersionedTable.commitDelta(spark, root, tables.map { t =>
-        t.name -> Delta(buckets(sets, t.name) ++ buckets(oldSets, t.name),
-          Changeset.delta(t, ofType(t.etype)))
+        t.name -> Delta(bucketsOf(t, keys(t.name)),
+          Changeset.delta(t, changed(t.etype), upserts(t.etype)))
       }.toMap, Map(
-        SeqKey -> batchRow.getLong(2).toString,
+        SeqKey -> seqnum.toString,
         BatchIdKey -> batchId.toString) ++ extraMeta, dryRun = dryRun)
       ApplyResult.Applied
-    } finally { changes.unpersist(blocking = false); () }
+    } finally { if (held.isEmpty) changes.unpersist(blocking = false); () }
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.functions.{GraftFunctions, IdBitmapImpl, IdBitmapProbe}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.{call_function, col, explode, lit}
 import org.apache.spark.sql.types.ArrayType
 
@@ -136,7 +137,10 @@ object BitmapSemi {
     * elements each count; nulls are ignored. Each set is a [[Bitmap]]
     * if it fits `maxBytes`, else a [[Frame]] over `src`; a partial over
     * the cap is dropped where it is built, so no oversized bitmap is
-    * shipped. */
+    * shipped. The job runs inside a SQL execution of the scan's plan,
+    * as the plan's own actions do, so its tasks compile and load their
+    * generated classes through the session's class loader (see
+    * [[DriverBudget.collectUnder]]). */
   def idSets(src: DataFrame, cols: Seq[Column],
              maxBytes: Int = MaxBytes): Seq[IdSet] = {
     val k = cols.size
@@ -155,9 +159,10 @@ object BitmapSemi {
     val isArray = named.schema.fields.map(_.dataType.isInstanceOf[ArrayType])
     def ids(i: Int): Column =
       col(s"_c$i").cast(if (isArray(i)) "array<bigint>" else "bigint")
-    val merged = named.select(cols.indices.map(ids): _*)
-      .queryExecution.toRdd
-      .mapPartitions { rows =>
+    val scan = named.select(cols.indices.map(ids): _*)
+    val merged = SQLExecution.withNewExecutionId(scan.queryExecution,
+      Some("idSets")) {
+      scan.queryExecution.toRdd.mapPartitions { rows =>
         val bufs = Array.fill(k)(new IdBitmapImpl.Buffer)
         rows.foreach { r =>
           var i = 0
@@ -178,8 +183,8 @@ object BitmapSemi {
           val bytes = b.serialize
           if (bytes.length <= cap) bytes else null
         })
-      }
-      .treeAggregate(zero)(merge, merge)
+      }.treeAggregate(zero)(merge, merge)
+    }
     cols.indices.map { i =>
       if (merged(i) == null) Frame(named.select(
         (if (isArray(i)) explode(ids(i)) else ids(i)).as("id"))

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Budgets for collecting to the driver: how many edge rows the
   * adaptive driver-side path of [[Components]] may collect, a small,
@@ -59,26 +60,36 @@ object DriverBudget {
     * reaches the driver, whatever the partition count: a frame over the
     * cap, or one whose rows crowd into one partition, costs the job but
     * not the driver's memory before the caller falls back to its
-    * distributed path. An empty frame always fits. */
+    * distributed path. An empty frame always fits.
+    *
+    * The job runs inside a SQL execution of `df`'s plan, as its own
+    * actions do, so its tasks load generated classes through the
+    * session's class loader: the classes its adaptive stages compiled
+    * serve its result stage too, and a later action over the same plan
+    * (`df.localCheckpoint()`, say) reuses them and its finished
+    * shuffles. */
   def collectUnder(df: DataFrame, maxBytes: Long): Option[Array[Row]] = {
     val schema = df.schema
-    val rdd = df.queryExecution.toRdd
-    val share = maxBytes / math.max(1, rdd.getNumPartitions)
-    val parts = rdd.mapPartitions { rows =>
-      lazy val toUnsafe = UnsafeProjection.create(schema)
-      val out = Array.newBuilder[UnsafeRow]
-      var bytes = 0L
-      while (rows.hasNext && bytes <= share) {
-        val r = (rows.next() match {
-          case u: UnsafeRow => u
-          case other => toUnsafe(other)
-        }).copy()
-        bytes += r.getSizeInBytes
-        out += r
-      }
-      Iterator.single(if (bytes <= share && !rows.hasNext) out.result()
-        else null)
-    }.collect()
+    val parts = SQLExecution.withNewExecutionId(df.queryExecution,
+      Some("collectUnder")) {
+      val rdd = df.queryExecution.toRdd
+      val share = maxBytes / math.max(1, rdd.getNumPartitions)
+      rdd.mapPartitions { rows =>
+        lazy val toUnsafe = UnsafeProjection.create(schema)
+        val out = Array.newBuilder[UnsafeRow]
+        var bytes = 0L
+        while (rows.hasNext && bytes <= share) {
+          val r = (rows.next() match {
+            case u: UnsafeRow => u
+            case other => toUnsafe(other)
+          }).copy()
+          bytes += r.getSizeInBytes
+          out += r
+        }
+        Iterator.single(if (bytes <= share && !rows.hasNext) out.result()
+          else null)
+      }.collect()
+    }
     if (parts.contains(null)) None
     else {
       val toRow = ExpressionEncoder(schema).resolveAndBind()

@@ -2,6 +2,7 @@ package graft.osm
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
+import graft.io.NioLocalFileSystem
 import graft.ops.BitmapSemi
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -119,6 +120,11 @@ object VersionedTable {
     * with the table's name, before the write starts — lets a spec fail
     * one table's write in the middle of a commit. */
   private[osm] var tableWriteHook: String => Unit = _ => ()
+
+  /** Test seam: runs after a commit's table writes have all finished,
+    * before its manifest is written — lets a spec fail a commit whose
+    * data is complete but unpublished. */
+  private[osm] var publishHook: () => Unit = () => ()
 
   /** Bucketed-table layout: `nBuckets` hash buckets on column `key`;
     * `versions(b)` = the version whose directory holds bucket b.
@@ -348,6 +354,7 @@ object VersionedTable {
   }
 
   private def writeManifest(root: String, m: Manifest): Unit = {
+    publishHook()
     val node: ObjectNode = mapper.createObjectNode()
     node.put("version", m.version)
     val arr = node.putArray("tables")
@@ -477,17 +484,27 @@ object VersionedTable {
     * `__bucket=B/` directory per bucket under `path`, rows sorted by
     * `key` within each bucket, at `pageRowLimit` rows per Parquet page.
     *
-    * r16: the write repartitions to EXACTLY `width` tasks, the layout's
-    * bucket granularity, instead of the session shuffle width. The
-    * column-only repartition let AQE coalesce the tiny-bucket shuffle
-    * to its 64 MB advisory — the q197/q50 base commits measured as 4
-    * tasks carrying ~10 s of sort+encode CPU while 28 cores idled
-    * (bench/r16 JobProbe); at planet scale the same rule keeps write
-    * width tracking the store's declared bucket count, not whatever
-    * machine runs the commit. */
+    * `width` is the number of write tasks. At 1 the rows are coalesced
+    * into one task with no exchange, so the write is one job of one
+    * task. Above 1 they are repartitioned by `__bucket` into exactly
+    * `width` tasks, the layout's bucket count: the column-only
+    * repartition let AQE coalesce a tiny-bucket shuffle to its 64 MB
+    * advisory, and the q197/q50 base commits measured as 4 tasks
+    * carrying ~10 s of sort+encode CPU while 28 cores idled (bench/r16
+    * JobProbe). Either width writes the same store: every bucket's rows
+    * meet in one task, which writes them as one key-sorted file, so
+    * files, bytes and page granularity do not depend on it.
+    * [[commitDelta]] picks 1 when its rewrite is small (see
+    * [[deltaWidth]]); [[commitBucketed]] always writes `nBuckets` wide.
+    *
+    * The write goes through [[graft.io.NioLocalFileSystem]], named in
+    * its options: without native libhadoop, Hadoop's local FileSystem
+    * forks a `chmod` per directory, data file and `.crc` it creates,
+    * 281 processes for an 8-table, 8-bucket `expand`. */
   private def writeBuckets(df: DataFrame, key: String, width: Int,
                            pageRowLimit: Int, path: String): Unit =
-    df.repartition(math.max(1, width), col("__bucket"))
+    (if (width <= 1) df.coalesce(1)
+     else df.repartition(width, col("__bucket")))
       // (__bucket, key), NOT key alone: the dynamic-partition writer
       // REQUIRES its output ordered by the partition column, and an
       // ordering that doesn't lead with __bucket makes Spark insert its
@@ -499,7 +516,8 @@ object VersionedTable {
       // requirement, so THIS sort is the only one and per-bucket key
       // order is exact.
       .sortWithinPartitions(col("__bucket"), col(key))
-      .write.mode("overwrite").partitionBy("__bucket")
+      .write.options(NioLocalFileSystem.options)
+      .mode("overwrite").partitionBy("__bucket")
       // Point-read page granularity: a probe's cost floor is the
       // record-decode of every row in the column-index-selected pages,
       // so page row count bounds per-probe work the way a B-tree leaf
@@ -510,6 +528,37 @@ object VersionedTable {
       // granularity) stay unchanged.
       .option("parquet.page.row.count.limit", pageRowLimit.toString)
       .parquet(path)
+
+  /** Per bucket of the layout, the largest rewrite, by its plan's size
+    * estimate, that [[commitDelta]] writes in one task. Measured on a
+    * 4-core machine (`local[4]`), rewriting every bucket of one table:
+    * one task and the `nBuckets`-wide write tied at about 1.4 MiB of
+    * files for 8 buckets, 2.7 MiB for 16 and 5.9 MiB for 64; below
+    * that one task won (by 60 ms for 8 buckets at 0.55 MiB, 550 ms for
+    * 64 at 0.7 MiB), above it the wide write did (for 8 buckets at
+    * 2.7 MiB, 370 ms against 540 ms). 96 KiB a bucket is 0.75, 1.5 and
+    * 6 MiB. */
+  final val SingleTaskWriteBytesPerBucket: Long = 96L << 10
+
+  /** Test seam: the per-bucket bound [[deltaWidth]] applies, which is
+    * [[SingleTaskWriteBytesPerBucket]] outside tests. */
+  private[osm] var singleTaskWriteBytesPerBucket: Long =
+    SingleTaskWriteBytesPerBucket
+
+  /** Write tasks for a [[commitDelta]] rewrite `out` of an
+    * `nBuckets`-bucket table: 1 when the optimizer's size estimate of
+    * `out` is at most `nBuckets` times
+    * [[singleTaskWriteBytesPerBucket]], else `nBuckets`. The estimate
+    * counts the rows the transform adds as well as the old files it
+    * reads: a file read is sized by its file index, which the read
+    * built when it was opened, and a held change set's local relation
+    * by its rows, so this lists nothing and starts no job. A plan whose
+    * size is unknown, such as one over an RDD, reads as too large and
+    * is written wide. */
+  private[osm] def deltaWidth(out: DataFrame, nBuckets: Int): Int =
+    if (out.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        BigInt(singleTaskWriteBytesPerBucket) * nBuckets) 1
+    else nBuckets
 
   /** Write all `tables` as the next version and atomically publish it
     * together with `meta` (merged over the previous version's meta).
@@ -534,7 +583,8 @@ object VersionedTable {
       parallelTableWrites(root, next,
         tables.head._2.sparkSession.sparkContext, tables.toSeq) {
         case (name, df) =>
-          df.write.mode("overwrite").parquet(s"$root/v=$next/$name")
+          df.write.options(NioLocalFileSystem.options).mode("overwrite")
+            .parquet(s"$root/v=$next/$name")
       }
       if (!dryRun) {
         val prevM = prev.getOrElse(Manifest(0L, Nil, Map.empty))
@@ -817,7 +867,8 @@ object VersionedTable {
             s"commitDelta: the transform of $name does not match its " +
               s"recorded schema: ${drift.mkString(", ")}")
         }
-        (name, spec, changed, out)
+        (name, spec, changed, out,
+          out.fold(1)(deltaWidth(_, spec.nBuckets)))
       }
       // the page granularity the store was laid out with (recorded in
       // meta at commitBucketed time): a CDC-rewritten bucket must keep
@@ -828,23 +879,23 @@ object VersionedTable {
       // overlap them like commit()/commitBucketed() (guide §2.6); the
       // manifest spec update below is pure driver arithmetic
       parallelTableWrites(root, next, spark.sparkContext, resolved) {
-        case (name, spec, changed, out) =>
+        case (name, spec, changed, out, width) =>
         out.foreach { df =>
           tableWriteHook(name)
           // guard: keep only rows that truly hash into the changed set,
           // so a buggy transform cannot leak rows into linked buckets.
           // The set goes in as a bitmap literal, which generated code
-          // holds by reference, and the write is always as wide as the
-          // layout: neither depends on which buckets changed, so the
-          // classes compiled for one commit serve the next
+          // holds by reference, and the write takes one of two widths:
+          // neither depends on which buckets changed, so the classes
+          // compiled for one commit serve the next
           writeBuckets(
             BitmapSemi.bitmapOf(changed.iterator.map(_.toLong)).filter(
               df.withColumn("__bucket", bucketExpr(spec.key, spec.nBuckets)),
               col("__bucket")),
-            spec.key, spec.nBuckets, pageRowLimit, s"$root/v=$next/$name")
+            spec.key, width, pageRowLimit, s"$root/v=$next/$name")
         }
       }
-      val newBuckets = resolved.map { case (name, spec, changed, _) =>
+      val newBuckets = resolved.map { case (name, spec, changed, _, _) =>
         val versions = spec.versions.zipWithIndex.map { case (v, b) =>
           if (changed.contains(b)) next else v
         }

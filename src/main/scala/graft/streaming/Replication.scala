@@ -4,6 +4,7 @@ import graft.ops.{BitmapSemi, DriverBudget}
 import graft.ops.BitmapSemi.IdSet
 import graft.osm.{Changeset, OsmLayout, VersionedTable}
 import graft.osm.VersionedTable.Delta
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{MapType, StructType}
@@ -201,7 +202,9 @@ object Replication {
     * its emptiness, max(seqnum) and bucket sets are arithmetic over the
     * rows, each element type's changed ids become a bitmap and its
     * visible upserts a local relation. A batch over the cap stays a
-    * persisted frame, and its id sets are taken from it by one scan
+    * frame, checkpointed from the collect's own plan so the dedup runs
+    * once and persisted so joins over it know its size, and its id
+    * sets are taken from it by one scan
     * ([[BitmapSemi.idSets]], frames where a set itself exceeds the
     * cap). Either way the same code follows: the changed parents' old
     * rows are read bucket-pruned and filtered by their ids (the
@@ -238,11 +241,20 @@ object Replication {
     if (prev.meta.get(BatchIdKey).contains(batchId.toString))
       return ApplyResult.ReplayedBatch
     val bk = prev.buckets
-    val changes = latest(batch)
-    val held = DriverBudget.collectUnder(changes, maxBytes)
-    // over the cap the batch stays distributed, persisted so the id
-    // sets, max(seqnum) and the deltas read one dedup
-    if (held.isEmpty) changes.persist()
+    val dedup = latest(batch)
+    val held = DriverBudget.collectUnder(dedup, maxBytes)
+    // over the cap the batch stays distributed. A local checkpoint of
+    // the plan the collect just ran reuses its dedup shuffle, so the
+    // window's map stage runs once; persisted over it, the first action
+    // below (max(seqnum)) builds a cache whose real size plans the
+    // joins after it, and the id sets and deltas read that one dedup.
+    // Persisting the dedup before the collect would do both, but its
+    // cache stage costs every held apply a job. The checkpoint's blocks
+    // live on the executors that computed them: losing one fails this
+    // apply, whose claim is then released for a retry
+    val checkpoint =
+      Option.when(held.isEmpty)(dedup.localCheckpoint(eager = false))
+    val changes = checkpoint.fold(dedup)(_.persist())
     try {
       val schema = changes.schema
       val (idAt, etypeAt, visibleAt, seqAt) = (schema.fieldIndex("id"),
@@ -327,6 +339,12 @@ object Replication {
         SeqKey -> seqnum.toString,
         BatchIdKey -> batchId.toString) ++ extraMeta, dryRun = dryRun)
       ApplyResult.Applied
-    } finally { if (held.isEmpty) changes.unpersist(blocking = false); () }
+    } finally checkpoint.foreach { c =>
+      changes.unpersist(blocking = false)
+      c.queryExecution.logical.foreach {
+        case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+        case _ => ()
+      }
+    }
   }
 }

@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-/** Counts the Spark jobs a block of driver code starts, and the bytes
-  * their tasks send back to the driver. */
+/** Counts the Spark jobs a block of driver code starts, their tasks,
+  * the stages that read a given RDD, and the bytes those tasks send
+  * back to the driver. */
 object SparkJobs {
 
   /** Runs `body` under its own job tag and counts the Spark jobs it
@@ -27,6 +28,30 @@ object SparkJobs {
       if (stages.contains(e.stageId) && e.taskMetrics != null)
         bytes.addAndGet(e.taskMetrics.resultSize))(body)
     (bytes.get(), a)
+  }
+
+  /** Runs `body` under its own job tag and counts the tasks its jobs
+    * ran (a skipped stage runs none). */
+  def tasksIn[A](spark: SparkSession)(body: => A): (Int, A) = {
+    val stages = ConcurrentHashMap.newKeySet[Int]()
+    val tasks = new AtomicInteger(0)
+    val a = tagged(spark)(e => e.stageIds.foreach(stages.add(_)), e =>
+      if (stages.contains(e.stageId)) tasks.incrementAndGet())(body)
+    (tasks.get(), a)
+  }
+
+  /** Runs `body` under its own job tag and counts the stages its jobs
+    * ran that compute `rddId`, a stage skipped because its shuffle
+    * output was reused not included: how many times the RDD was read
+    * through. */
+  def stagesReading[A](spark: SparkSession, rddId: Int)(body: => A)
+  : (Int, A) = {
+    val reading = ConcurrentHashMap.newKeySet[Int]()
+    val ran = ConcurrentHashMap.newKeySet[Int]()
+    val a = tagged(spark)(e => e.stageInfos.foreach(s =>
+      if (s.rddInfos.exists(_.id == rddId)) reading.add(s.stageId)), e =>
+      if (reading.contains(e.stageId)) ran.add(e.stageId))(body)
+    (ran.size, a)
   }
 
   /** Runs `body` under a fresh job tag, passing the start of every job

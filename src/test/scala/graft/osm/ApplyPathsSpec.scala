@@ -28,8 +28,8 @@ import scala.util.Random
   * and rewrite way node lists and relation members of all three
   * types. Plus: a batch over the cap whose partitions each fit it
   * still takes the frame side, a second diff compiles (almost) no new
-  * classes, and a table write failing mid-apply leaves one
-  * transaction. */
+  * classes, and a commit failing in a table write, or after its writes
+  * but before its manifest, leaves one transaction. */
 class ApplyPathsSpec extends AnyFunSuite with graft.TestSession {
   import ApplyPathsSpec._
 
@@ -39,27 +39,8 @@ class ApplyPathsSpec extends AnyFunSuite with graft.TestSession {
     root
   }
 
-  /** Every table's rows, as a multiset. */
-  private def content(root: String): Map[String, Map[Row, Int]] = {
-    val m = VersionedTable.current(root).get
-    m.buckets.keys.map { t =>
-      t -> VersionedTable.read(spark, root, t, Some(m)).collect().toSeq
-        .groupBy(identity).map { case (r, rs) => r -> rs.size }
-    }.toMap
-  }
-
-  private def sameStore(want: String, got: String, clue: String): Unit = {
-    val (a, b) = (VersionedTable.current(want).get,
-      VersionedTable.current(got).get)
-    assert(b.version == a.version, clue)
-    assert(b.meta == a.meta, clue)
-    assert(b.buckets.keySet == a.buckets.keySet, clue)
-    for (t <- a.buckets.keys.toSeq.sorted)
-      assert(b.buckets(t).versions == a.buckets(t).versions, s"$clue $t")
-    val (ca, cb) = (content(want), content(got))
-    for (t <- ca.keys.toSeq.sorted)
-      assert(cb(t) == ca(t), s"$clue $t")
-  }
+  private def sameStore(want: String, got: String, clue: String): Unit =
+    ApplyPathsSpec.sameStore(spark, want, got, clue)
 
   test("the driver-held and frame change sets reach the reference's " +
     "store, row for row") {
@@ -174,6 +155,41 @@ class ApplyPathsSpec extends AnyFunSuite with graft.TestSession {
       sameStore(clean, failed, s"cap=$cap replay:")
     }
   }
+
+  test("a commit failing after its table writes, before its manifest, " +
+    "leaves the store at v, releases the claim, and a replay reaches " +
+    "the reference's store") {
+    for ((width, isWide) <- Widths;
+         cap <- Seq(graft.ops.BitmapSemi.MaxBytes, 0))
+    atWidth(isWide) {
+      val clue = s"$width cap=$cap"
+      val rnd = new Random(17)
+      val w = genWorld(rnd)
+      val (failed, ref) = (fresh("unpublished", w), fresh("ref", w))
+      val rows = genDiff(rnd, 10L)
+      val v = VersionedTable.current(failed).get.version
+      val written = new java.util.concurrent.atomic.AtomicBoolean(false)
+      VersionedTable.publishHook = () => {
+        written.set(Files.exists(Paths.get(failed, s"v=${v + 1}")))
+        throw new IllegalStateException("injected at publish")
+      }
+      val e = try intercept[Exception] {
+        Replication.applyBatch(spark, failed, diffFrame(spark, rows), 1L,
+          maxBytes = cap)
+      } finally VersionedTable.publishHook = () => ()
+      assert(e.getMessage.contains("injected at publish"), s"$clue: $e")
+      assert(written.get, s"$clue: the hook ran before the table writes")
+      assert(VersionedTable.current(failed).get.version == v, clue)
+      assert(VersionedTable.manifestAt(failed, v + 1).isEmpty, clue)
+      assert(!Files.exists(Paths.get(failed, s"manifest.v=${v + 1}.json")),
+        s"$clue: the claim on v=${v + 1} was kept")
+      assert(Reference.applyBatch(spark, ref, diffFrame(spark, rows), 1L) ==
+        Replication.ApplyResult.Applied, clue)
+      assert(Replication.applyBatch(spark, failed, diffFrame(spark, rows),
+        1L, maxBytes = cap) == Replication.ApplyResult.Applied, clue)
+      sameStore(ref, failed, s"$clue replay:")
+    }
+  }
 }
 
 object ApplyPathsSpec {
@@ -280,6 +296,48 @@ object ApplyPathsSpec {
         Map("type" -> "route"), meta, seq)
     }
   }
+
+  /** Every table's rows, as a multiset. */
+  def content(spark: SparkSession, root: String)
+  : Map[String, Map[Row, Int]] = {
+    val m = VersionedTable.current(root).get
+    m.buckets.keys.map { t =>
+      t -> VersionedTable.read(spark, root, t, Some(m)).collect().toSeq
+        .groupBy(identity).map { case (r, rs) => r -> rs.size }
+    }.toMap
+  }
+
+  /** `got` is the store `want` is: the same version, meta and bucket
+    * versions, and every table's rows. */
+  def sameStore(spark: SparkSession, want: String, got: String,
+                clue: String): Unit = {
+    import org.scalatest.Assertions._
+    val (a, b) = (VersionedTable.current(want).get,
+      VersionedTable.current(got).get)
+    assert(b.version == a.version, clue)
+    assert(b.meta == a.meta, clue)
+    assert(b.buckets.keySet == a.buckets.keySet, clue)
+    for (t <- a.buckets.keys.toSeq.sorted)
+      assert(b.buckets(t).versions == a.buckets(t).versions, s"$clue $t")
+    val (ca, cb) = (content(spark, want), content(spark, got))
+    for (t <- ca.keys.toSeq.sorted)
+      assert(cb(t) == ca(t), s"$clue $t")
+  }
+
+  /** Runs `body` with every [[VersionedTable.commitDelta]] rewrite
+    * written wide (`isWide`) or in one task, then restores the
+    * single-task bound. */
+  def atWidth[A](isWide: Boolean)(body: => A): A = {
+    val prev = VersionedTable.singleTaskWriteBytesPerBucket
+    // a bound below every size estimate, or above every one
+    VersionedTable.singleTaskWriteBytesPerBucket =
+      if (isWide) -1L else Long.MaxValue
+    try body finally VersionedTable.singleTaskWriteBytesPerBucket = prev
+  }
+
+  /** The two write widths of a delta commit, by name. */
+  val Widths: Seq[(String, Boolean)] =
+    Seq("single-task" -> false, "wide" -> true)
 
   def diffFrame(spark: SparkSession, rows: Seq[Row]): DataFrame =
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),

@@ -17,8 +17,9 @@ import scala.util.Random
   * churn across all three member types, an element changed twice in
   * one diff) run through `applyBatch` on an 8-bucket, 8-table store;
   * for each table the buckets the new manifest owns at the new version
-  * must be exactly the reference's set. Plus the job count of one such
-  * apply, its commit's table writes included. */
+  * must be exactly the reference's set. Plus the job and task counts of
+  * one such apply, its commit's table writes included, and the job
+  * count of one over the cap. */
 class ApplyBucketsSpec extends AnyFunSuite with graft.TestSession {
   private val NBuckets = 8
   private val MTypes = Seq("node", "way", "relation")
@@ -193,13 +194,48 @@ class ApplyBucketsSpec extends AnyFunSuite with graft.TestSession {
     // warm-up diff: the first apply in a JVM also pays one-off planning
     Replication.applyBatch(spark, root, diffFrame(genDiff(rnd, 10L)), 1L)
     val rows = genDiff(rnd, 20L)
-    val (jobs, result) = graft.SparkJobs.jobsIn(spark) {
-      Replication.applyBatch(spark, root, diffFrame(rows), 2L)
+    val (tasks, (jobs, result)) = graft.SparkJobs.tasksIn(spark) {
+      graft.SparkJobs.jobsIn(spark) {
+        Replication.applyBatch(spark, root, diffFrame(rows), 2L)
+      }
     }
     assert(result == Replication.ApplyResult.Applied)
-    // every job, the commit pool's table writes included: 18 measured
-    // with local[4]; the batch-set aggregates and per-table anti-joins
-    // the driver-held change set replaced started 49
-    assert(jobs <= 18, s"applyBatch started $jobs jobs")
+    info(s"$jobs jobs, $tasks tasks")
+    // every job, the commit pool's table writes included, measured with
+    // local[4]: each rewritten table is one write job of one task. A
+    // shuffle job and an 8-task write job per table started 18 jobs and
+    // 93 tasks; the batch-set aggregates and per-table anti-joins the
+    // driver-held change set replaced started 49 jobs
+    assert(jobs <= 11, s"applyBatch started $jobs jobs")
+    assert(tasks <= 20, s"applyBatch ran $tasks tasks")
+  }
+
+  test("applyBatch over the cap runs its dedup window once") {
+    val rnd = new Random(98)
+    val root = Files.createTempDirectory("graft-apply-overcap").toString
+    commitWorld(root, genWorld(rnd))
+    Replication.applyBatch(spark, root, diffFrame(genDiff(rnd, 10L)), 1L,
+      maxBytes = 0)
+    val diff = spark.sparkContext.parallelize(genDiff(rnd, 20L), 2)
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    val (windows, (jobs, result)) = graft.SparkJobs.stagesReading(spark,
+      diff.id) {
+      graft.SparkJobs.jobsIn(spark) {
+        Replication.applyBatch(spark, root,
+          spark.createDataFrame(diff, Replication.changeSchema), 2L,
+          maxBytes = 0)
+      }
+    }
+    assert(result == Replication.ApplyResult.Applied)
+    assert(spark.sparkContext.getPersistentRDDs.size == persisted,
+      "the apply left its change set persisted")
+    info(s"$jobs jobs, the diff read by $windows stages")
+    // only the dedup window's shuffle map stage reads the diff: a
+    // cache planned afresh after the collect ran it a second time
+    assert(windows == 1, s"the diff was read by $windows stages")
+    // 64 measured with local[4]; that fresh cache started 73, and a
+    // checkpoint with no cache over it 85, its joins planned without a
+    // size and broadcast only after their shuffle map stages ran
+    assert(jobs <= 64, s"applyBatch over the cap started $jobs jobs")
   }
 }

@@ -118,9 +118,7 @@ object Bench {
       // additionally shares one bundle across segment JVMs).
       val osmSelected =
         graft.osm.OsmQueries.all.exists(q => selected(q.name))
-      if (!sys.env.contains("SPARK_GRAFT_BENCH_NO_OSM_WARMUP") &&
-          osmSelected)
-        graft.osm.SyntheticOsm.materialized(spark, sfDir)
+      if (osmSelected) graft.osm.SyntheticOsm.materialized(spark, sfDir)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] WARMUP FAILED (osm bundle/shuffle): " +
         s"${e.getClass.getSimpleName}: ${e.getMessage}")
@@ -134,7 +132,6 @@ object Bench {
     // round-4 "unexplained q41-q45 regressions" were exactly this).
     // SyntheticOsm's bundle is parquet-backed, not cached — unaffected.
     def sweep(): Unit = {
-      if (sys.env.contains("SPARK_GRAFT_BENCH_NO_SWEEP")) return
       try {
         spark.sharedState.cacheManager.clearCache()
         spark.sparkContext.getPersistentRDDs.valuesIterator

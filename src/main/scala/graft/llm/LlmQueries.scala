@@ -724,7 +724,7 @@ object LlmQueries {
 
     // ---- near-dup CONNECTED COMPONENTS: pairs say "a~b"; curation
     // needs the transitive cluster. Large-star/small-star (or driver
-    // union-find below the adaptive limit) labels every doc with the
+    // union-find when the edges fit the 32 MiB cap) labels every doc with the
     // min doc_id of its duplicate cluster; oracle is a recursive CTE
     // reachability fixpoint over the same verified pairs ----
     Q("q57_dedup_components",

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -22,11 +22,14 @@ import org.apache.spark.storage.StorageLevel
   * count (edges only ever re-point toward smaller ids).
   *
   * Scale notes (100 TB design):
-  *   - the edge set is never collected above `driverEdgeLimit`; below
-  *     it, a driver-side union-find runs instead (dedup graphs are
-  *     sparse — pairs surviving jaccard-verify are a tiny fraction of
-  *     the corpus — and the distributed path stays the contract at
-  *     scale);
+  *   - the driver-size rule is the one [[Closure]], [[BitmapSemi]] and
+  *     `applyBatch` use: the canonical edge set is collected by
+  *     [[DriverBudget.collectUnder]] when its binary rows total at most
+  *     `maxBytes` ([[BitmapSemi.MaxBytes]], 32 MiB: 1,398,101 edges of
+  *     24 bytes), and a driver-side union-find labels it (dedup graphs
+  *     are sparse — pairs surviving jaccard-verify are a tiny fraction
+  *     of the corpus); over the cap the collect ships nothing past a
+  *     partition's share and the star loop runs;
   *   - every round is localCheckpoint()ed: lineage would otherwise
   *     double per iteration and re-execute the whole LSH pipeline each
   *     round;
@@ -36,6 +39,9 @@ import org.apache.spark.storage.StorageLevel
   */
 object Components {
 
+  /** Safety bound on the number of star rounds. */
+  val MaxIters: Int = 25
+
   /** Component label per node: `id` -> `component` where component is
     * the MINIMUM node id reachable from `id` (EVERY node present in
     * `edges` gets a label, including one whose only edge is a
@@ -44,80 +50,82 @@ object Components {
     * treated as undirected and may contain duplicates or self-loops.
     */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
-                          maxIters: Int = 25,
-                          driverEdgeLimit: Long =
-                            DriverBudget.edgeCollectLimit()): DataFrame = {
+                          maxBytes: Long = BitmapSemi.MaxBytes): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // self-loops are KEPT through the dedup (a node whose only edge is
     // (x,x) is still "present in edges" and must come back labeled
-    // x -> x); the star loop below excludes them, so they are split
-    // off after the path decision
+    // x -> x); the star loop excludes them, so it splits them off
     val eAll = edges
       .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
       .select(greatest($"u", $"v").as("u"), least($"u", $"v").as("v"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // ONE action decides the path AND feeds the driver branch: take()
-    // returns at most limit+1 rows (no 4M-row driver materialization on
-    // the fallback path) while the persist caches the edges for the
-    // distributed loop. The old count-then-collect shape ran the whole
-    // upstream LSH pipeline's result through two driver round trips.
-    val taken = eAll.take(
-      math.min(driverEdgeLimit, Int.MaxValue - 1L).toInt + 1)
-    if (taken.length <= driverEdgeLimit) {
-      // driver union-find (path-halving); the collected set is the
-      // VERIFIED pair list, already a tiny fraction of the corpus. All-primitive:
-      // node ids are mapped to dense ints via one sorted long array +
-      // binary search, and union-find runs over an Array[Int] — no
-      // boxed HashMap (the round-7 33.7s q57 was the boxed version at
-      // 1.7M edges).
-      val n = taken.length
-      val eu = new Array[Long](n); val ev = new Array[Long](n)
-      var i = 0
-      while (i < n) {
-        val r = taken(i); eu(i) = r.getLong(0); ev(i) = r.getLong(1)
-        i += 1
-      }
-      eAll.unpersist(blocking = false)
-      // sorted distinct node ids (primitive sort + in-place unique)
-      val all = new Array[Long](2 * n)
-      System.arraycopy(eu, 0, all, 0, n)
-      System.arraycopy(ev, 0, all, n, n)
-      java.util.Arrays.sort(all)
-      var m = 0
-      i = 0
-      while (i < all.length) {
-        if (m == 0 || all(i) != all(m - 1)) { all(m) = all(i); m += 1 }
-        i += 1
-      }
-      val ids = java.util.Arrays.copyOf(all, m)
-      val parent = Array.tabulate(m)(identity)
-      def find(x0: Int): Int = {
-        var x = x0
-        while (parent(x) != x) {
-          parent(x) = parent(parent(x)) // path halving
-          x = parent(x)
-        }
-        x
-      }
-      i = 0
-      while (i < n) {
-        // ids is ascending, so smaller index == smaller node id:
-        // union toward the smaller index and the root IS the min id
-        val ra = find(java.util.Arrays.binarySearch(ids, eu(i)))
-        val rb = find(java.util.Arrays.binarySearch(ids, ev(i)))
-        if (ra != rb) {
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-        i += 1
-      }
-      val out = new Array[(Long, Long)](m)
-      i = 0
-      while (i < m) { out(i) = (ids(i), ids(find(i))); i += 1 }
-      return out.toSeq.toDF("id", "component")
+    // the one collect decides the path and feeds the union-find; the
+    // persist keeps the edges for the star loop when they do not fit
+    DriverBudget.collectUnder(eAll, maxBytes) match {
+      case Some(rows) =>
+        eAll.unpersist(blocking = false)
+        unionFind(rows).toSeq.toDF("id", "component")
+      case None => starLoop(eAll)
     }
+  }
+
+  /** Driver union-find (path-halving) over the collected canonical
+    * edges. All-primitive: node ids are mapped to dense ints via one
+    * sorted long array + binary search, and union-find runs over an
+    * Array[Int] — no boxed HashMap (the round-7 33.7s q57 was the boxed
+    * version at 1.7M edges). */
+  private def unionFind(rows: Array[Row]): Array[(Long, Long)] = {
+    val n = rows.length
+    val eu = new Array[Long](n); val ev = new Array[Long](n)
+    var i = 0
+    while (i < n) {
+      val r = rows(i); eu(i) = r.getLong(0); ev(i) = r.getLong(1)
+      i += 1
+    }
+    // sorted distinct node ids (primitive sort + in-place unique)
+    val all = new Array[Long](2 * n)
+    System.arraycopy(eu, 0, all, 0, n)
+    System.arraycopy(ev, 0, all, n, n)
+    java.util.Arrays.sort(all)
+    var m = 0
+    i = 0
+    while (i < all.length) {
+      if (m == 0 || all(i) != all(m - 1)) { all(m) = all(i); m += 1 }
+      i += 1
+    }
+    val ids = java.util.Arrays.copyOf(all, m)
+    val parent = Array.tabulate(m)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) {
+        parent(x) = parent(parent(x)) // path halving
+        x = parent(x)
+      }
+      x
+    }
+    i = 0
+    while (i < n) {
+      // ids is ascending, so smaller index == smaller node id:
+      // union toward the smaller index and the root IS the min id
+      val ra = find(java.util.Arrays.binarySearch(ids, eu(i)))
+      val rb = find(java.util.Arrays.binarySearch(ids, ev(i)))
+      if (ra != rb) {
+        if (ra < rb) parent(rb) = ra else parent(ra) = rb
+      }
+      i += 1
+    }
+    val out = new Array[(Long, Long)](m)
+    i = 0
+    while (i < m) { out(i) = (ids(i), ids(find(i))); i += 1 }
+    out
+  }
+
+  /** Large-star/small-star rounds over the persisted canonical edges
+    * `eAll` (u >= v), which it unpersists. */
+  private def starLoop(eAll: DataFrame): DataFrame = {
+    import eAll.sparkSession.implicits._
 
     def canon(df: DataFrame): DataFrame = df
       .select(greatest($"u", $"v").as("u"), least($"u", $"v").as("v"))
@@ -154,10 +162,9 @@ object Components {
       repointed
     }
 
-    // split AFTER the path decision: the star loop runs on proper
-    // edges; self-loop-only nodes come back as singleton labels.
-    // Checkpointed eagerly so it survives eAll's unpersist without
-    // re-running the upstream pair pipeline.
+    // the star loop runs on proper edges; self-loop-only nodes come
+    // back as singleton labels. Checkpointed eagerly so it survives
+    // eAll's unpersist without re-running the upstream pair pipeline.
     val selfOnly = eAll.where($"u" === $"v")
       .select($"u".as("id"), $"u".as("component"))
       .localCheckpoint(eager = true)
@@ -166,7 +173,7 @@ object Components {
     var sig = signature(cur)
     var iter = 0
     var converged = false
-    while (!converged && iter < maxIters) {
+    while (!converged && iter < MaxIters) {
       val next = canon(smallStar(largeStar(cur)))
         .localCheckpoint(eager = true)
       val nsig = signature(next)

@@ -1,7 +1,7 @@
 package graft.spatial
 
 import graft.functions.GraftFunctions
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The engine's spatial scan: region -> covering -> cell-range pruned
@@ -10,11 +10,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: the covering is computed DRIVER-SIDE (<= 1024 cells of
   * metadata — the only non-distributed artifact, exactly like the
-  * reference's planner), then turned into a broadcast range semi-join
-  * against the scanned table's s2cell column. With the table written
+  * reference's planner), then turned into a [[cellInRanges]] filter on
+  * the scanned table's s2cell column. With the table written
   * sorted/partitioned by s2cell, parquet row-group min/max stats prune
-  * almost all IO; the semi-join itself is map-side (broadcast, no
-  * shuffle of the big side).
+  * almost all IO; the filter itself is map-side (no shuffle of the big
+  * side).
   *
   * Like the reference, results are cell-APPROXIMATE by default
   * (`docs/MANUAL.md:144-148`): a covering cell may contain points just
@@ -29,47 +29,13 @@ object SpatialScan {
     GraftFunctions.s2CellId(latE7.cast("double") / 1e7,
       lngE7.cast("double") / 1e7, level)
 
-  /** OR-of-ranges predicate over a level-16 cell column for a covering.
-    * For small coverings this inlines as disjuncts (fully pushable to
-    * parquet row-group pruning); large coverings should use
-    * [[rangeSemiJoin]] instead. */
-  def rangePredicate(cellCol: Column, ranges: Seq[(Long, Long)]): Column =
-    ranges.map { case (lo, hi) => cellCol >= lo && cellCol <= hi }
-      .reduceOption(_ || _).getOrElse(lit(false))
-
-  /** Broadcast range semi-join: keeps rows whose `cellCol` falls in any
-    * covering range. Covering cells are disjoint, so no duplication. */
-  def rangeSemiJoin(df: DataFrame, cellCol: Column,
-                    ranges: Seq[(Long, Long)]): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val r = ranges.toDF("range_lo", "range_hi")
-    df.join(broadcast(r),
-      cellCol >= col("range_lo") && cellCol <= col("range_hi"),
-      "left_semi")
-  }
-
   /** O(log n)-per-row covering membership via the native
     * [[graft.functions.CellInRanges]] expression (binary search over the
-    * sorted literal ranges, inside whole-stage codegen) — preferred over
-    * [[rangeSemiJoin]]'s nested-loop probe for large coverings. Requires
+    * sorted literal ranges, inside whole-stage codegen). Requires
     * [[GraftFunctions.register]] on the session. */
   def cellInRanges(cellCol: Column, ranges: Seq[(Long, Long)]): Column = {
     val sorted = ranges.sortBy(_._1)
     call_function("cell_in_ranges", cellCol,
       typedlit(sorted.map(_._1)), typedlit(sorted.map(_._2)))
-  }
-
-  /** Cell-approximate region filter (reference semantics): covering
-    * ranges only, no exact residual. `latCol`/`lngCol` in degrees. */
-  def filterByRegionApprox(df: DataFrame, latCol: Column, lngCol: Column,
-                           region: Region,
-                           level: Int = graft.model.Model.CellIndexLevel)
-  : DataFrame = {
-    val ranges = Coverer.coveringRanges(region, level = level)
-    val cell = GraftFunctions.s2CellId(latCol, lngCol, level)
-    if (ranges.size <= 16)
-      df.where(rangePredicate(cell, ranges)) // small: parquet-pushable
-    else df.where(cellInRanges(cell, ranges))
   }
 }

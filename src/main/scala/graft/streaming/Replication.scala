@@ -203,8 +203,9 @@ object Replication {
     * rows, each element type's changed ids become a bitmap and its
     * visible upserts a local relation. A batch over the cap stays a
     * frame, checkpointed from the collect's own plan so the dedup runs
-    * once and persisted so joins over it know its size, and its id
-    * sets are taken from it by one scan
+    * once and persisted so joins over it know its size (the
+    * checkpoint is dropped once that cache is built, so the set is
+    * held once), and its id sets are taken from it by one scan
     * ([[BitmapSemi.idSets]], frames where a set itself exceeds the
     * cap). Either way the same code follows: the changed parents' old
     * rows are read bucket-pruned and filtered by their ids (the
@@ -250,11 +251,18 @@ object Replication {
     // joins after it, and the id sets and deltas read that one dedup.
     // Persisting the dedup before the collect would do both, but its
     // cache stage costs every held apply a job. The checkpoint's blocks
-    // live on the executors that computed them: losing one fails this
-    // apply, whose claim is then released for a retry
+    // are dropped once that first action has read them all into the
+    // cache, so the change set is held once; until then they live on
+    // the executors that computed them: losing one fails this apply,
+    // whose claim is then released for a retry
     val checkpoint =
       Option.when(held.isEmpty)(dedup.localCheckpoint(eager = false))
     val changes = checkpoint.fold(dedup)(_.persist())
+    def dropCheckpoint(): Unit = checkpoint.foreach(
+      _.queryExecution.logical.foreach {
+        case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+        case _ => ()
+      })
     try {
       val schema = changes.schema
       val (idAt, etypeAt, visibleAt, seqAt) = (schema.fieldIndex("id"),
@@ -266,8 +274,10 @@ object Replication {
           return ApplyResult.EmptyDiff(prev.version)
         case Some(rows) => rows.iterator.filterNot(_.isNullAt(seqAt))
           .map(_.getLong(seqAt)).maxOption
-        case None => Option(changes.agg(max(col("seqnum"))).head().get(0))
-          .map(_.asInstanceOf[Long])
+        case None =>
+          val m = changes.agg(max(col("seqnum"))).head()
+          dropCheckpoint()
+          Option(m.get(0)).map(_.asInstanceOf[Long])
       }
       require(bk.nonEmpty,
         s"catch-up needs a bucketed store at $root (commitBucketed)")
@@ -339,12 +349,9 @@ object Replication {
         SeqKey -> seqnum.toString,
         BatchIdKey -> batchId.toString) ++ extraMeta, dryRun = dryRun)
       ApplyResult.Applied
-    } finally checkpoint.foreach { c =>
+    } finally if (checkpoint.nonEmpty) {
       changes.unpersist(blocking = false)
-      c.queryExecution.logical.foreach {
-        case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-        case _ => ()
-      }
+      dropCheckpoint()
     }
   }
 }

@@ -1,21 +1,46 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.types.{DataType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Connected components (large-star/small-star + adaptive driver
-  * union-find) — the dedup-cluster labeling step. */
+/** Connected components (large-star/small-star + driver union-find
+  * under the byte cap) — the dedup-cluster labeling step. Each case
+  * runs on both branches: `maxBytes` 0 takes the star loop and
+  * `Long.MaxValue` the union-find. */
 class ComponentsSpec extends AnyFunSuite with graft.TestSession {
   import spark.implicits._
 
-  private def labelsOf(edges: Seq[(Long, Long)], driverLimit: Long)
-  : Map[Long, Long] =
-    Components.connectedComponents(
-        edges.toDF("a", "b"), "a", "b", driverEdgeLimit = driverLimit)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  private val Branches = Seq(0L, Long.MaxValue)
+
+  private def components(edges: Seq[(Long, Long)], maxBytes: Long)
+  : DataFrame = Components.connectedComponents(
+    edges.toDF("a", "b"), "a", "b", maxBytes = maxBytes)
+
+  private def labels(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** The union-find's answer is a local relation; the star loop's reads
+    * its checkpoints. */
+  private def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.logical.collectFirst { case l: LocalRelation => l }
+      .nonEmpty
+
+  /** Labels from the branch `maxBytes` pins: the star loop at 0, the
+    * union-find otherwise. */
+  private def labelsOf(edges: Seq[(Long, Long)], maxBytes: Long)
+  : Map[Long, Long] = {
+    val df = components(edges, maxBytes)
+    assert(isLocal(df) == (maxBytes > 0), s"maxBytes=$maxBytes")
+    labels(df)
+  }
 
   test("chain collapses to its minimum (both paths)") {
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
-    for (lim <- Seq(0L, 1000000L)) {
+    for (lim <- Branches) {
       val m = labelsOf(chain, lim)
       assert(m == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L))
     }
@@ -23,7 +48,7 @@ class ComponentsSpec extends AnyFunSuite with graft.TestSession {
 
   test("two components, duplicate + self + reversed edges tolerated") {
     val e = Seq((2L, 1L), (1L, 2L), (2L, 2L), (7L, 9L), (9L, 8L), (7L, 9L))
-    for (lim <- Seq(0L, 1000000L)) {
+    for (lim <- Branches) {
       val m = labelsOf(e, lim)
       assert(m == Map(1L -> 1L, 2L -> 1L, 7L -> 7L, 8L -> 7L, 9L -> 7L))
     }
@@ -32,7 +57,7 @@ class ComponentsSpec extends AnyFunSuite with graft.TestSession {
   test("a node whose ONLY edge is a self-loop still gets a label " +
     "(both paths)") {
     val e = Seq((7L, 7L), (1L, 2L))
-    for (lim <- Seq(0L, 1000000L)) {
+    for (lim <- Branches) {
       val m = labelsOf(e, lim)
       assert(m == Map(1L -> 1L, 2L -> 1L, 7L -> 7L),
         s"self-loop-only node dropped (lim=$lim): $m")
@@ -45,7 +70,7 @@ class ComponentsSpec extends AnyFunSuite with graft.TestSession {
     val edges = Seq.fill(90)(
       (rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
       .filter(p => p._1 != p._2)
-    val driver = labelsOf(edges, 1000000L)
+    val driver = labelsOf(edges, Long.MaxValue)
     val dist = labelsOf(edges, 0L)
     assert(dist == driver)
   }
@@ -53,9 +78,11 @@ class ComponentsSpec extends AnyFunSuite with graft.TestSession {
   test("star + deep chain both converge within the iteration bound") {
     val star = (2L to 40L).map(i => (1L, i))
     val chain = (100L until 163L).map(i => (i, i + 1))
-    val m = labelsOf(star ++ chain, 0L)
-    assert((2L to 40L).forall(m(_) == 1L))
-    assert((100L to 163L).forall(m(_) == 100L))
+    for (lim <- Branches) {
+      val m = labelsOf(star ++ chain, lim)
+      assert((2L to 40L).forall(m(_) == 1L), s"lim=$lim")
+      assert((100L to 163L).forall(m(_) == 100L), s"lim=$lim")
+    }
   }
 
   test("both paths agree with a BFS reference over many random graphs") {
@@ -85,29 +112,44 @@ class ComponentsSpec extends AnyFunSuite with graft.TestSession {
         (rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
         .filter(p => p._1 != p._2)
       val ref = bfsLabels(edges)
-      assert(labelsOf(edges, 1000000L) == ref, s"driver path, seed $seed")
+      assert(labelsOf(edges, Long.MaxValue) == ref, s"driver path, seed $seed")
       assert(labelsOf(edges, 0L) == ref, s"distributed path, seed $seed")
     }
   }
 
   test("byte-derived edge budget: arithmetic and the fallback boundary") {
-    import graft.ops.DriverBudget
-    // 2 GiB heap at 5% / 128 B per collected row -> 838,860 rows
-    assert(DriverBudget.edgeRowBudget(2L * 1024 * 1024 * 1024) == 838860L)
-    // 16 GiB -> ~6.7M: same order as the old flat 4M, but heap-aware
-    assert(DriverBudget.edgeRowBudget(16L * 1024 * 1024 * 1024)
-      == 6710886L)
-    // degenerate heap -> budget 0 -> adaptive collect disabled entirely
-    assert(DriverBudget.edgeRowBudget(0L) == 0L)
+    // a canonical edge is two non-null longs: a 24-byte UnsafeRow (an
+    // 8-byte null bitset and two 8-byte words), so the 32 MiB cap holds
+    // 1,398,101 of them
+    val edge = UnsafeProjection.create(Array[DataType](LongType, LongType))
+      .apply(InternalRow(2L, 1L))
+    assert(edge.getSizeInBytes == 24)
+    assert(BitmapSemi.MaxBytes / edge.getSizeInBytes == 1398101)
 
-    // boundary pin: canonical distinct edge count is 3; a limit of
-    // exactly 3 takes the driver path, 2 falls back to distributed —
-    // and both label identically (the contract the budget swap relies
-    // on)
-    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L))
+    // a graph under the default cap is held and labeled on the driver
+    // (a local relation); with the cap at 0 it takes the star loop —
+    // and both label identically (the contract the cap relies on)
+    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (5L, 5L))
     val expect = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L,
-      11L -> 10L)
-    assert(labelsOf(edges, 3L) == expect)  // == limit: driver union-find
-    assert(labelsOf(edges, 2L) == expect)  // > limit: distributed loop
+      11L -> 10L, 5L -> 5L)
+    val held = Components.connectedComponents(edges.toDF("a", "b"), "a", "b")
+    val capped = components(edges, 0L)
+    assert(isLocal(held))
+    assert(!isLocal(capped))
+    assert(labels(held) == expect)
+    assert(labels(capped) == expect)
+  }
+
+  test("the held branch decides and collects in 3 Spark jobs") {
+    // the dedup's shuffle, the cache over it and the one collect: no
+    // probe ahead of the collect
+    val rnd = new scala.util.Random(3)
+    val edges = Seq.fill(500)(
+      (rnd.nextInt(400).toLong, rnd.nextInt(400).toLong))
+    val (jobs, out) = graft.SparkJobs.jobsIn(spark) {
+      components(edges, BitmapSemi.MaxBytes)
+    }
+    assert(isLocal(out))
+    assert(jobs == 3, s"the held branch started $jobs jobs")
   }
 }

@@ -27,7 +27,8 @@ import scala.util.Random
   * visible, then content, delete ids never seen, upsert untagged nodes
   * and rewrite way node lists and relation members of all three
   * types. Plus: a batch over the cap whose partitions each fit it
-  * still takes the frame side, a second diff compiles (almost) no new
+  * still takes the frame side, which holds the change set once while
+  * it commits, a second diff compiles (almost) no new
   * classes, and a commit failing in a table write, or after its writes
   * but before its manifest, leaves one transaction. */
 class ApplyPathsSpec extends AnyFunSuite with graft.TestSession {
@@ -86,21 +87,22 @@ class ApplyPathsSpec extends AnyFunSuite with graft.TestSession {
       assert(parts.count(_ > 0) >= 2, parts.toSeq)
       val cap = (parts.max + (parts.sum - parts.max) / 2).toInt
       info(s"partition bytes ${parts.mkString(",")}; cap $cap")
-      for ((maxBytes, frameSide) <- Seq((cap, true),
-        (graft.ops.BitmapSemi.MaxBytes, false))) {
+      for ((maxBytes, extra) <- Seq((cap, 1), (0, 1),
+        (graft.ops.BitmapSemi.MaxBytes, 0))) {
         val (ref, got) = (fresh("ref", w), fresh("capped", w))
         assert(Reference.applyBatch(spark, ref, batch, 1L) ==
           Replication.ApplyResult.Applied)
-        // the frame side persists the dedup output for its commit
-        // (the hook runs on the commit pool's threads)
+        // the frame side holds the dedup output once for its commit,
+        // as the cache built over its dropped checkpoint (the hook runs
+        // on the commit pool's threads)
         val before = spark.sparkContext.getPersistentRDDs.size
-        val persisted = new ConcurrentLinkedQueue[Boolean]
+        val persisted = new ConcurrentLinkedQueue[Int]
         VersionedTable.tableWriteHook = _ =>
-          persisted.add(spark.sparkContext.getPersistentRDDs.size > before)
+          persisted.add(spark.sparkContext.getPersistentRDDs.size - before)
         try assert(Replication.applyBatch(spark, got, batch, 1L,
           maxBytes = maxBytes) == Replication.ApplyResult.Applied)
         finally VersionedTable.tableWriteHook = _ => ()
-        assert(persisted.asScala.toSet == Set(frameSide),
+        assert(persisted.asScala.toSet == Set(extra),
           s"maxBytes=$maxBytes")
         sameStore(ref, got, s"maxBytes=$maxBytes:")
       }
